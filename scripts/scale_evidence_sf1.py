@@ -65,6 +65,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from toy_vector_db_spark import caches  # noqa: E402
 from toy_vector_db_spark.operators import (  # noqa: E402
     evaluation,
     hnsw,
@@ -531,20 +532,9 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     key_fn(spark, sf_dir).collect()  # warm scans + JIT once, untimed
 
     def evict_owned():
-        # the caches an ivf_train run populates (bench evicts exactly
+        # the store entries an ivf_train run creates (bench evicts exactly
         # these before each timed sample via warmup-pass ownership)
-        for d in (
-            similarity._ASSIGN_CACHE,
-            similarity._CELL_VECTORS_CACHE,
-        ):
-            for v in d.values():
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-            d.clear()
-        similarity._SAMPLE_CACHE.clear()
-        similarity._TRAINED_CACHE.clear()
+        caches.evict("assign", "cell_vectors", "train_sample", "trained")
 
     def timed(fn, reps=5):
         walls = []
@@ -556,7 +546,7 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
 
     # term 1: the bounded training-sample collect (cold each rep)
     def sample():
-        similarity._SAMPLE_CACHE.clear()
+        caches.evict("train_sample")
         similarity._train_sample(base, "vec_id", "embedding")
 
     t_sample = timed(sample)
@@ -566,7 +556,7 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     similarity._train_sample(base, "vec_id", "embedding")
 
     def kmeans():
-        similarity._TRAINED_CACHE.clear()
+        caches.evict("trained")
         similarity.cached_trained_centroids(base)
 
     t_kmeans = timed(kmeans)
@@ -576,16 +566,7 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     similarity.cached_trained_centroids(base)
 
     def cell_build():
-        for d in (
-            similarity._ASSIGN_CACHE,
-            similarity._CELL_VECTORS_CACHE,
-        ):
-            for v in d.values():
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-            d.clear()
+        caches.evict("assign", "cell_vectors")
         similarity.cached_cell_vectors(base)
 
     t_cells = timed(cell_build)

@@ -19,40 +19,34 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 PKG = REPO / "toy_vector_db_spark"
 
 
-def test_every_session_cache_is_registered():
-    """Grep the package for module-level _*_CACHE / _CACHE dicts and
-    assert each is in caches._cache_dicts() — a new session cache that
-    bench.py doesn't roll back silently turns a build-key repeat back
-    into a dict-hit measurement."""
+def test_no_module_outside_caches_defines_a_session_cache():
+    """Every session memo lives in the one store in caches.py, so
+    snapshot/restore/reset see all of them by construction. A module-level
+    _*_CACHE dict anywhere else would be a memo bench.py cannot roll
+    back, silently turning a build-key repeat into a dict-hit
+    measurement."""
     pattern = re.compile(r"^(_[A-Z0-9_]*CACHE)\s*[:=]", re.M)
-    found: set[tuple[str, str]] = set()
-    for py in PKG.rglob("*.py"):
-        rel = py.relative_to(PKG).as_posix()[:-3].replace("/", ".")
-        for m in pattern.finditer(py.read_text()):
-            found.add((f"toy_vector_db_spark.{rel}", m.group(1)))
-    import importlib
-
-    dict_ids = {id(d) for d in caches._cache_dicts()}
-    missing = []
-    for mod_name, var in sorted(found):
-        mod = importlib.import_module(mod_name)
-        obj = getattr(mod, var)
-        if isinstance(obj, dict) and id(obj) not in dict_ids:
-            missing.append(f"{mod_name}.{var}")
-    assert not missing, f"session caches not in caches._cache_dicts(): {missing}"
+    found = [
+        f"{py.relative_to(PKG).as_posix()}:{m.group(1)}"
+        for py in sorted(PKG.rglob("*.py"))
+        if py.name != "caches.py"
+        for m in pattern.finditer(py.read_text())
+    ]
+    assert not found, f"session caches outside caches.py: {found}"
+    assert not hasattr(caches, "_cache_dicts")
 
 
 def test_snapshot_restore_drops_only_new_entries():
-    d = caches._cache_dicts()[0]
+    ((store, _),) = caches.snapshot()
     sentinel_old = ("__test_old__",)
-    d[sentinel_old] = [1]
+    store[sentinel_old] = [1]
     snap = caches.snapshot()
     sentinel_new = ("__test_new__",)
-    d[sentinel_new] = [2]
+    store[sentinel_new] = [2]
     dropped = caches.restore(snap)
     assert dropped == 1
-    assert sentinel_old in d and sentinel_new not in d
-    del d[sentinel_old]
+    assert sentinel_old in store and sentinel_new not in store
+    del store[sentinel_old]
 
 
 def test_added_since_and_drop_track_build_key_ownership():
@@ -61,19 +55,19 @@ def test_added_since_and_drop_track_build_key_ownership():
     exactly those before every sample — upstream artifacts stay warm.
     added_since must report only post-snapshot entries; drop must evict
     them (idempotently) and leave everything else."""
-    d = caches._cache_dicts()[0]
+    ((store, _),) = caches.snapshot()
     upstream = ("__test_upstream__",)
-    d[upstream] = [0]
+    store[upstream] = [0]
     snap = caches.snapshot()
     mine = ("__test_mine__",)
-    d[mine] = [1]
+    store[mine] = [1]
     added = caches.added_since(snap)
-    assert (d, mine) in [(dd, k) for dd, k in added]
+    assert (store, mine) in [(dd, k) for dd, k in added]
     assert all(k != upstream for _, k in added)
     assert caches.drop(added) == 1
-    assert mine not in d and upstream in d
+    assert mine not in store and upstream in store
     assert caches.drop(added) == 0  # second evict is a no-op
-    del d[upstream]
+    del store[upstream]
 
 
 def test_bench_warmup_runs_every_headline_key_untimed():

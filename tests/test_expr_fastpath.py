@@ -69,15 +69,16 @@ def test_vector_builders_str_vs_column(emb):
 def test_expr_cache_hits_and_is_registered(emb):
     from toy_vector_db_spark import caches
 
-    assert any(
-        d is V._EXPR_CACHE for d in caches._cache_dicts()
-    ), "vector._EXPR_CACHE missing from caches._cache_dicts()"
-    V._EXPR_CACHE.clear()
+    caches.evict("expr")
+    snap = caches.snapshot()
     c1 = V.magnitude("embedding")
+    assert [k[0] for _, k in caches.added_since(snap)] == ["expr"], (
+        "the parsed expression must live in the session store"
+    )
     c2 = V.magnitude("embedding")
     assert c1 is c2, "memo must return the same Column object on a hit"
     # a dropped entry (bench eviction) just re-parses
-    V._EXPR_CACHE.clear()
+    caches.evict("expr")
     c3 = V.magnitude("embedding")
     assert c3 is not c1
     rows = emb.select(c1.alias("a"), c3.alias("b")).collect()
@@ -240,6 +241,21 @@ def test_lit_vec_bit_identical(spark, emb):
     )
 
 
+def test_lit_vec_keeps_the_sign_of_zero(spark):
+    """ADVICE r15 item 1: 0.0 == -0.0 and both hash alike, so the literal
+    memo keyed on the value tuple served an all-0.0 vector's literal for
+    an all--0.0 query. _lit_vec is no longer memoized: each call renders
+    its own vector."""
+    from toy_vector_db_spark.operators import knn as K
+
+    pos = K._lit_vec([0.0, 0.0, 0.0])
+    neg = K._lit_vec([-0.0, -0.0, -0.0])
+    assert "-0.0D" not in str(pos)
+    assert str(neg).count("-0.0D") == 3, str(neg)
+    row = spark.range(1).select(neg.alias("v")).first()
+    assert _bits([float(x) for x in row["v"]]) == _bits([-0.0] * 3)
+
+
 def test_lit_vec_memo_key_is_collision_proof(spark):
     """Advice r14 (medium): the round-14 memo keyed on
     hash(tuple(vals)) — CPython guarantees hash(-1.0) == hash(-2.0), so
@@ -261,7 +277,7 @@ def test_lit_vec_memo_key_is_collision_proof(spark):
 
 
 def test_pq_lut_cache_key_is_content_keyed(spark, emb):
-    """Advice r14 (low): _PQ_LUT_CACHE fingerprinted codebooks with
+    """Advice r14 (low): the PQ LUT memo fingerprinted codebooks with
     Python's salted 64-bit hash(bytes) — collisions improbable, not
     impossible. Now shape + sha256 digest: two different codebook sets
     must produce different LUTs (and the same set must hit the memo)."""

@@ -119,16 +119,15 @@ def test_incremental_pack_prepopulates_and_matches_full(spark, embeddings):
     hnsw.cached_packed_index(parted0, edges0)  # base pack in session cache
     parted1, edges1 = hnsw.hnsw_upsert(parted0, edges0, batch, P)
     key1 = hnsw._packed_key(parted1, edges1, "vec_id")
-    assert key1 in hnsw._PACKED_EDGE_CACHE, "upsert did not pre-populate"
-    inc = {
-        r["part"]: r.asDict()
-        for r in hnsw._PACKED_EDGE_CACHE[key1].collect()
-    }
+    packed1 = hnsw._packed_peek(key1)
+    assert packed1 is not None, "upsert did not pre-populate"
+    inc = {r["part"]: r.asDict() for r in packed1.collect()}
     full = {
         r["part"]: r.asDict()
         for r in hnsw.pack_index(parted1, edges1).collect()
     }
     assert inc == full  # bytes-exact, every shard
+    assert hnsw.cached_packed_index(parted1, edges1) is packed1
     # and a query through the packed serve matches the scratch build
     qs = embeddings.where(F.col("vec_id") >= cut).select(
         F.col("vec_id").alias("query_id"),

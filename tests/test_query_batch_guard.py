@@ -11,6 +11,7 @@ on the fixture workloads (so driver hashes cannot move).
 import pytest
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.operators import knn, similarity
 from toy_vector_db_spark.plans import explain
 from toy_vector_db_spark.sources.ndjson import split_count
@@ -51,13 +52,15 @@ def _oversized_queries(spark, embeddings, nrows):
 def test_oversized_batch_gets_catalyst_plan_no_collect(spark, embeddings):
     base, _ = _splits(spark, embeddings)
     big = _oversized_queries(spark, embeddings, knn.QUERY_BATCH_MAX + 1)
-    before = dict(knn._QUERY_BATCH_CACHE)
+    snap = caches.snapshot()
     out = knn.pair_scores(base, big)
     plan = explain.formatted_plan(out)
     # pure-Catalyst fallback: no Arrow kernel node in the plan
     assert "PythonMapInArrow" not in plan and "MapInArrow" not in plan
     # the oversized frame was never collected to the driver
-    assert dict(knn._QUERY_BATCH_CACHE) == before
+    assert not [
+        k for _, k in caches.added_since(snap) if k[0] == "query_batch"
+    ]
     # and the oversized (right/query) side is never the broadcast side —
     # with the hint dropped, Spark is free to broadcast the SMALL base
     # side instead (BuildLeft at fixture scale: correct), but must not
@@ -94,10 +97,10 @@ def test_fallback_values_match_kernel(spark, embeddings, monkeypatch):
     base, qs = _splits(spark, embeddings)
     kernel = knn.knn_exact_batch(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = knn.knn_exact_batch(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_fallback_values_match_kernel_ivf(spark, embeddings, monkeypatch):
@@ -109,12 +112,12 @@ def test_fallback_values_match_kernel_ivf(spark, embeddings, monkeypatch):
         base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
     ).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = similarity.knn_ivf(
         base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
     ).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_fallback_values_match_kernel_dual_metric(spark, embeddings,
@@ -122,10 +125,10 @@ def test_fallback_values_match_kernel_dual_metric(spark, embeddings,
     base, qs = _splits(spark, embeddings)
     kernel = knn.pair_scores(base, qs, dual_metric=True).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = knn.pair_scores(base, qs, dual_metric=True).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_oversized_with_cells_routing_raises(spark, embeddings):
@@ -170,10 +173,22 @@ def test_count_guard_recounts_when_staging_dir_grows(spark, tmp_path):
     # the hazard precondition this test exists for: when the two plans
     # hash identically, only the file snapshot can distinguish them
     if first.semanticHash() == second.semanticHash():
-        assert knn._input_snapshot(first) != knn._input_snapshot(second)
+        assert caches.file_snapshot(first) != caches.file_snapshot(second)
     assert knn.query_batch_count(second) == 35, (
         "guard served the stale pre-growth count"
     )
+    # an mtime-only rewrite (same name, same size) must change the
+    # snapshot too: it is the (file, size, mtime_ns) entries themselves,
+    # not a hash of them
+    import os
+
+    snap = caches.file_snapshot(second)
+    f, size, mtime = snap[0]
+    path = os.path.join(staging, os.path.basename(f))
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    snap2 = caches.file_snapshot(second)
+    assert snap2[0] == (f, size, mtime + 10**9)
+    assert snap2 != snap and snap2[1:] == snap[1:]
 
 
 def test_collected_batch_cache_recollects_when_staging_dir_grows(
@@ -208,10 +223,10 @@ def test_fallback_values_match_kernel_sq_adc(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_sq_rerank(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = similarity.knn_sq_rerank(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
@@ -226,10 +241,10 @@ def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_pq_adc(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = similarity.knn_pq_adc(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_fallback_values_match_kernel_ivfpq(spark, embeddings, monkeypatch):
@@ -243,10 +258,10 @@ def test_fallback_values_match_kernel_ivfpq(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_ivfpq(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = similarity.knn_ivfpq(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_fallback_values_match_kernel_ivfsq(spark, embeddings, monkeypatch):
@@ -260,10 +275,10 @@ def test_fallback_values_match_kernel_ivfsq(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_ivfsq(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
     fallback = similarity.knn_ivfsq(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
+    caches.evict("query_count")
 
 
 def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
@@ -319,3 +334,36 @@ def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
     assert len(got) == 25 and got[0][1] == [3.0, 4.0], (
         "cache served the stale pre-rewrite batch"
     )
+
+
+def test_per_query_memos_hold_at_most_the_lru_bound(
+    spark, embeddings, monkeypatch
+):
+    """A session of distinct query frames must not grow the store without
+    bound: each per-query kind keeps at most caches.QUERY_LRU entries,
+    least recently used evicted first, while build artifacts stay."""
+    from collections import Counter
+
+    bound = 2
+    monkeypatch.setattr(caches, "QUERY_LRU", bound)
+    base, _ = _splits(spark, embeddings)
+    base = base.select("vec_id", "embedding")
+    ((store, _),) = caches.snapshot()
+
+    def serve(i):
+        q = embeddings.where(F.col("vec_id") == i).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+            F.lit(i % 2).alias("qlabel"),
+        )
+        similarity.knn_ivfpq(base, q.select("query_id", "query_vec"), 10)
+        knn._collected_qlabel_map(q, "query_id", "qlabel")
+
+    serve(0)
+    artifacts = {k for k in store if k[0] not in caches.BOUNDED}
+    for i in range(1, bound + 3):
+        serve(i)
+    held = Counter(k[0] for k in store if k[0] in caches.BOUNDED)
+    assert set(held) == caches.BOUNDED, held
+    assert all(n <= bound for n in held.values()), held
+    assert artifacts <= set(store), "a build artifact was LRU-evicted"

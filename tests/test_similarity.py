@@ -505,32 +505,23 @@ def test_ivfpq_partitioned_search_prunes_and_matches(spark, embeddings):
     )
 
 
-def test_rerank_budget_cap(spark, embeddings):
+def test_rerank_budget_cap(spark, embeddings, monkeypatch):
     """Round 7 (verdict r6 item 3): the fraction term of the rerank
     budget is CAPPED at RERANK_CAP — uncapped it re-scored 10% of the
     corpus per query at any scale, a linear serving cost no deployment
     ships. The cap must be inactive at fixture scale (no result drift)
     and binding at simulated production scale."""
-    key = (
-        spark.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "vec_id",
+    from toy_vector_db_spark import caches
+
+    key = caches.key("count", spark, (embeddings,), params=("vec_id",))
+    # simulated billion-vector corpus: budget = the constant cap
+    monkeypatch.setitem(caches._STORE, key, 10**9)
+    assert similarity._rerank_budget(embeddings, 10) == similarity.RERANK_CAP
+    # fixture-scale corpus: cap inactive, uncapped formula unchanged
+    monkeypatch.setitem(caches._STORE, key, 1900)
+    assert similarity._rerank_budget(embeddings, 10) == max(
+        similarity.RERANK_MULT * 10, 190
     )
-    old = similarity._COUNT_CACHE.get(key)
-    try:
-        # simulated billion-vector corpus: budget = the constant cap
-        similarity._COUNT_CACHE[key] = 10**9
-        assert similarity._rerank_budget(embeddings, 10) == similarity.RERANK_CAP
-        # fixture-scale corpus: cap inactive, uncapped formula unchanged
-        similarity._COUNT_CACHE[key] = 1900
-        assert similarity._rerank_budget(embeddings, 10) == max(
-            similarity.RERANK_MULT * 10, 190
-        )
-    finally:
-        if old is None:
-            similarity._COUNT_CACHE.pop(key, None)
-        else:
-            similarity._COUNT_CACHE[key] = old
 
 
 def test_fixed_rerank_budget_recall(spark, embeddings, monkeypatch):
@@ -1569,3 +1560,29 @@ def test_adc_emission_is_per_partition_exact(spark, embeddings):
     full = similarity._pq_pair_adc(codes, qs, books)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     assert n_rows > 2 * r  # the bound actually binds
+
+
+def test_assign_survives_cell_vectors_eviction(spark, sf_dir):
+    """ADVICE r15 item 4: cached_cell_vectors seeded an unpersisted
+    projection of itself as the assignment entry, so evicting the cell
+    table left an assignment whose plan recomputed the base×C argmin.
+    The assignment now projects the cell table only while it is stored,
+    and otherwise builds and persists its own."""
+    from toy_vector_db_spark import caches
+    from toy_vector_db_spark.plans import explain
+
+    # an uncached scan: the plan may only read InMemoryTableScan if the
+    # assignment itself is stored
+    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").where(
+        F.col("vec_id") < 400
+    )
+    snap = caches.snapshot()
+    similarity.cached_cell_vectors(base)
+    cv = [(d, k) for d, k in caches.added_since(snap) if k[0] == "cell_vectors"]
+    assert len(cv) == 1
+    assert caches.drop(cv) == 1
+    assign = similarity.cached_trained_assign(base)
+    assign.collect()
+    plan = explain.formatted_plan(assign)
+    assert "InMemoryTableScan" in plan, plan
+    caches.restore(snap)

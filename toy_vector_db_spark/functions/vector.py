@@ -28,6 +28,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
+
 
 def _dbl(v: Column) -> Column:
     """Cast an array<float> column to array<double> for stable arithmetic."""
@@ -63,23 +65,19 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# Memoized SQL-parsed expression Columns for the str-argument fast path
-# (round 14, guide §1/§7.3 driver discipline): the Python HOF builders
-# below (F.aggregate/F.zip_with with Python lambdas) cost ~40-60 py4j
-# round-trips PER dot — profiled at ~0.3-0.5 s of every IVF-family
-# serving key's driver-side construction, more than some keys' executor
-# time. When callers pass plain SQL column references (the overwhelmingly
-# common case), the whole expression parses JVM-side in ONE py4j call
-# via F.expr and the resulting unresolved Column — an immutable
-# expression tree that analysis re-resolves per plan — is memoized per
-# (function, arg strings). The SQL text is built to produce the exact
+# Memoized SQL-parsed expression Columns for the str-argument fast path:
+# the Python HOF builders below (F.aggregate/F.zip_with with Python
+# lambdas) cost ~40-60 py4j round-trips PER dot — profiled at ~0.3-0.5 s
+# of every IVF-family serving key's driver-side construction. When
+# callers pass plain SQL column references (the common case), the whole
+# expression parses JVM-side in ONE py4j call via F.expr, and the
+# resulting unresolved Column — an immutable expression tree that
+# analysis re-resolves per plan — is memoized per (function, arg
+# strings) as the store's "expr" kind. The SQL text produces the exact
 # same analyzed expression as the Column form (same lambda variable
 # names, double literals via the D suffix, identical op order), so
 # results are bit-identical; tests/test_expr_fastpath.py pins the two
 # forms equal and the oracle hashes pin cross-engine parity.
-# Registered in caches._cache_dicts (bench hygiene; entries are pure
-# unresolved expressions, dropping one only re-parses on next use).
-_EXPR_CACHE: dict[tuple, Column] = {}
 
 
 def _sql_dbl(v: str) -> str:
@@ -96,11 +94,9 @@ def _sql_dot_fold(a: str, b: str) -> str:
 
 
 def _cached_expr(key: tuple, sql: str) -> Column:
-    c = _EXPR_CACHE.get(key)
-    if c is None:
-        c = F.expr(sql)
-        _EXPR_CACHE[key] = c
-    return c
+    return caches.get_or_build(
+        caches.key("expr", params=key), lambda: F.expr(sql)
+    )
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
+
 # Reference hyperparameters (src/hnsw.rs:45-50)
 L = 4
 M_CONN = 16
@@ -418,15 +420,6 @@ def _ids_fingerprint(ids: np.ndarray) -> bytes:
     ).digest()[:8]
 
 
-# Per-session prebuilt-index cache: (applicationId, key, P) → persisted
-# (vectors-with-part, edges). Build once, search many — the operational
-# shape of a vector index (the reference also times search over an
-# already-built index, src/main.rs:41-43). At 100 TB the edges DataFrame
-# is written to parquet as an index table instead of memory-persisted;
-# the search path below is identical either way.
-_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def hnsw_index(
     base: DataFrame,
     num_partitions: int = 8,
@@ -464,17 +457,19 @@ def cached_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        cache_key,
-        num_partitions,
-        knn._input_snapshot(base),
+    """The prebuilt index under ``cache_key``, built once per session.
+    Build once, search many — the operational shape of a vector index
+    (the reference also times search over an already-built index,
+    src/main.rs:41-43). At 100 TB the edges DataFrame is written to
+    parquet as an index table instead of memory-persisted; the search
+    path is identical either way."""
+    return caches.get_or_build(
+        caches.key(
+            "hnsw_index", base.sparkSession, files=(base,),
+            params=(cache_key, num_partitions),
+        ),
+        lambda: hnsw_index(base, num_partitions, id_col, vec_col),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = hnsw_index(base, num_partitions, id_col, vec_col)
-    return _INDEX_CACHE[key]
 
 
 def _replicate_queries(
@@ -493,12 +488,6 @@ def _replicate_queries(
         .crossJoin(F.broadcast(parts))
     )
 
-
-# (appId, parted hash, edges hash, id_col) → persisted PACKED index
-# frame. Packing runs ONE cogroup pass over (ids, edges) per distinct
-# artifact pair per session; every query batch after that ships ~one
-# row per shard instead of one row per edge.
-_PACKED_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 _PACK_SCHEMA = (
     "part int, n long, ids_fp binary, "
@@ -559,27 +548,35 @@ def _packed_key(parted: DataFrame, edges: DataFrame, id_col: str) -> tuple:
     # a stale packed graph would either serve silently (ids unchanged)
     # or raise persistently on the ids_fp handshake until eviction —
     # the same staleness fix knn's query caches got in round 10
-    from toy_vector_db_spark.operators import knn
-
-    return (
-        parted.sparkSession.sparkContext.applicationId,
-        parted.semanticHash(),
-        edges.semanticHash(),
-        knn._input_snapshot(parted),
-        knn._input_snapshot(edges),
-        id_col,
+    return caches.key(
+        "packed_index", parted.sparkSession, (parted, edges),
+        (parted, edges), (id_col,),
     )
+
+
+def _packed_upsert(k: tuple) -> tuple:
+    # the incrementally packed artifact of an upserted pair: checkpointed
+    # rather than persisted, so it is its own kind over the same inputs
+    return caches.sibling(k, "packed_upsert")
+
+
+def _packed_peek(k: tuple) -> DataFrame | None:
+    p = caches.peek(k)
+    return p if p is not None else caches.peek(_packed_upsert(k))
 
 
 def cached_packed_index(
     parted: DataFrame, edges: DataFrame, id_col: str = "vec_id"
 ) -> DataFrame:
-    key = _packed_key(parted, edges, id_col)
-    if key not in _PACKED_EDGE_CACHE:
-        p = pack_index(parted, edges, id_col).persist()
-        p.count()
-        _PACKED_EDGE_CACHE[key] = p
-    return _PACKED_EDGE_CACHE[key]
+    """The persisted PACKED serving frame of an (ids, edges) pair: ONE
+    cogroup pass per distinct artifact pair per session; every query
+    batch after that ships ~one row per shard instead of one row per
+    edge. An upsert may already have packed the pair incrementally."""
+    k = _packed_key(parted, edges, id_col)
+    p = _packed_peek(k)
+    if p is not None:
+        return p
+    return caches.get_or_build(k, lambda: pack_index(parted, edges, id_col))
 
 
 def _incremental_pack(
@@ -603,11 +600,12 @@ def _incremental_pack(
     serve packs fully) — and always safe: the serve kernel re-checks
     every packed row against the shard's vector ids (ids_fp) before
     trusting it."""
-    base = _PACKED_EDGE_CACHE.get(_packed_key(old_parted, old_edges, id_col))
+    old_key = _packed_key(old_parted, old_edges, id_col)
+    base = _packed_peek(old_key)
     if base is None:
         return
     new_key = _packed_key(new_parted, new_edges, id_col)
-    if new_key in _PACKED_EDGE_CACHE:
+    if _packed_peek(new_key) is not None:
         return
     delta = pack_index(
         new_parted.where(F.col("part").isin(touched)),
@@ -624,27 +622,22 @@ def _incremental_pack(
     # the serve then repacks cold from the lifecycle frames, the same
     # cost as a fresh session (and a non-event on local[n], where
     # executor loss is process loss).
-    p = (
-        base.where(~F.col("part").isin(touched))
+    caches.get_or_build(
+        _packed_upsert(new_key),
+        lambda: base.where(~F.col("part").isin(touched))
         .unionByName(delta)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    _PACKED_EDGE_CACHE[new_key] = p
-    old = _PACKED_EDGE_CACHE.pop(
-        _packed_key(old_parted, old_edges, id_col), None
-    )
-    if old is not None:
-        # release the superseded artifact. For a localCheckpoint frame
-        # Dataset.unpersist only clears CacheManager entries — the
-        # checkpoint blocks are RDD-level storage that the
-        # ContextCleaner releases once the superseded Dataset becomes
-        # unreachable (advice r13: release is GC-DEFERRED, not
-        # immediate). Dropping the cache entry here removes the last
-        # live reference, so at most one superseded frame per lineage
-        # transiently holds blocks between eviction and the cleaner's
-        # next pass — bounded, and a non-issue for the one-frame-deep
-        # ingest sessions the bench and tests run.
-        old.unpersist()
+    # release the superseded artifact. For a localCheckpoint frame
+    # Dataset.unpersist only clears CacheManager entries — the
+    # checkpoint blocks are RDD-level storage that the ContextCleaner
+    # releases once the superseded Dataset becomes unreachable (advice
+    # r13: release is GC-DEFERRED, not immediate). Dropping the entry
+    # here removes the last live reference, so at most one superseded
+    # frame per lineage transiently holds blocks between eviction and
+    # the cleaner's next pass — bounded, and a non-issue for the
+    # one-frame-deep ingest sessions the bench and tests run.
+    caches.discard(old_key, _packed_upsert(old_key))
 
 
 def _prebuilt_search(
@@ -1043,18 +1036,13 @@ def cached_routed_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        "routed",
-        cache_key,
-        n_centroids,
-        knn._input_snapshot(base),
+    return caches.get_or_build(
+        caches.key(
+            "hnsw_routed", base.sparkSession, files=(base,),
+            params=(cache_key, n_centroids),
+        ),
+        lambda: routed_index(base, n_centroids, id_col, vec_col),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = routed_index(base, n_centroids, id_col, vec_col)
-    return _INDEX_CACHE[key]
 
 
 def knn_hnsw_routed_prebuilt(
@@ -1211,20 +1199,13 @@ def cached_routed_compact(
     semantic hashes of BOTH inputs — a cache_key-only key would hand a
     second caller with a different tombstone set the first caller's
     compacted index (deleted rows resurfacing with no error)."""
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        cells.sparkSession.sparkContext.applicationId,
-        "routed_compact",
-        cache_key,
-        cells.semanticHash(),
-        tombstones.semanticHash(),
-        knn._input_snapshot(cells),
-        knn._input_snapshot(tombstones),
+    return caches.get_or_build(
+        caches.key(
+            "hnsw_routed_compact", cells.sparkSession, (cells, tombstones),
+            (cells, tombstones), (cache_key,),
+        ),
+        lambda: routed_compact(cells, tombstones),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = routed_compact(cells, tombstones)
-    return _INDEX_CACHE[key]
 
 
 def _valid_int_label(label_col: str):
@@ -1335,18 +1316,13 @@ def cached_labeled_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        "labeled",
-        cache_key,
-        label_col,
-        knn._input_snapshot(base),
+    return caches.get_or_build(
+        caches.key(
+            "hnsw_labeled", base.sparkSession, files=(base,),
+            params=(cache_key, label_col),
+        ),
+        lambda: labeled_index(base, label_col, id_col, vec_col),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = labeled_index(base, label_col, id_col, vec_col)
-    return _INDEX_CACHE[key]
 
 
 def knn_hnsw_filtered(

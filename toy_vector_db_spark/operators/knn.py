@@ -27,12 +27,12 @@ truncates to k — O(n log n) single-threaded. Spark-first translation:
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.arrowkit import list_col_to_matrix
 
 from toy_vector_db_spark.functions import vector as V
@@ -75,25 +75,18 @@ def _lit_vec(vec) -> "F.Column":
     builds the array one element-literal py4j call at a time — measured
     136 ms for a 64-dim vector, most of knn_exact_single's construction
     — while the equivalent SQL array literal parses JVM-side in one
-    call (~1 ms), memoized per vector content (round 14). repr() is the
-    shortest round-tripping decimal and SQL's double parse is correctly
-    rounded, so the literal is bit-identical (pinned in
+    call (~1 ms). Not memoized: every fresh query vector would add an
+    entry, for a ~1 ms saving. repr() is the shortest round-tripping
+    decimal (it keeps the sign of -0.0) and SQL's double parse is
+    correctly rounded, so the literal is bit-identical (pinned in
     tests/test_expr_fastpath.py); non-finite values (no fixture or
-    serving path produces them) fall back to F.lit.
-
-    The memo key is the VALUE TUPLE itself (round 15, advice r14): the
-    round-14 key was hash(tuple(vals)), under which distinct vectors can
-    collide (hash(-1.0) == hash(-2.0) in CPython) and the second vector
-    would silently reuse the first one's literal. Keying on the tuple
-    makes a wrong hit impossible; the tuple is already built, so the
-    only cost is holding ~n doubles per distinct query vector."""
+    serving path produces them) fall back to F.lit."""
     vals = [float(x) for x in vec]
     if not all(math.isfinite(x) for x in vals):
         return F.lit(vals).cast("array<double>")
-    return V._cached_expr(
-        ("litvec", tuple(vals)),
+    return F.expr(
         "CAST(array(" + ", ".join(f"{x!r}D" for x in vals)
-        + ") AS ARRAY<DOUBLE>)",
+        + ") AS ARRAY<DOUBLE>)"
     )
 
 
@@ -247,107 +240,47 @@ def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
     return m
 
 
-# (appId, queries plan hash, input-file snapshot) → UPPER-BOUNDED row
-# count backing the guard: one scalar count job per distinct query frame
-# per session (the _rerank_budget cached-count idiom). Round-8 (advice
-# item 4): the count is limit(MAX+1)-bounded — the guard only ever
-# compares against QUERY_BATCH_MAX, so a frame just over the threshold
-# costs a short-circuit partial scan, not a full extra pass. Round 10
-# (verdict r9 item 5): the key now includes a fingerprint of the frame's
-# backing FILES, closing the staleness hazard the round-9 CAVEAT
-# documented — a serving process re-reading a GROWING staging dir gets a
-# fresh plan whose semantic hash can equal the old one (the relation
-# hashes by path, not by file list), and the stale count could silently
-# keep the collect path past QUERY_BATCH_MAX. Re-listing is driver-side
-# plan metadata (df.inputFiles), not a Spark job.
-_QUERY_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _input_snapshot(df: DataFrame) -> int:
-    """Order-insensitive fingerprint of the files backing a DataFrame —
-    empty (stable) for non-file-backed plans, where the semantic hash
-    alone remains the correct cache key.
-
-    Round 11 (advice r10): the fingerprint includes each file's size and
-    mtime, not just its path — an in-place rewrite that PRESERVES
-    filenames (compaction, dynamic-partition overwrite) must also
-    invalidate the cached count/batch, or a pre-rewrite count could keep
-    the collect path past QUERY_BATCH_MAX. Stat-ing is driver-side
-    metadata (no Spark job); files Spark lists but the OS can't stat
-    (e.g. a remote scheme this local harness never uses) degrade to
-    path-only entries rather than erroring the serving path."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file relations / analysis corner cases
-        files = []
-    entries = []
-    for f in sorted(files):
-        # inputFiles() renders Hadoop Paths as URIs — seen as both
-        # file:///p and file:/p, with special characters percent-
-        # encoded; urlparse+unquote handles every form (a hardcoded
-        # prefix strip mis-parsed file:/p and encoded paths, silently
-        # degrading the fingerprint to path-only — review r11)
-        if f.startswith("file:"):
-            p = unquote(urlparse(f).path)
-        else:
-            p = f
-        try:
-            st = os.stat(p)
-            entries.append((f, st.st_size, st.st_mtime_ns))
-        except OSError:
-            entries.append((f, -1, -1))
-    return hash(tuple(entries))
+def _query_key(kind: str, queries: DataFrame, *params) -> tuple:
+    # (appId, queries plan hash, input-file snapshot, params). The file
+    # snapshot closes the staleness hazard of a serving process
+    # re-reading a GROWING or rewritten staging dir: its fresh plan can
+    # hash like the old one (a relation hashes by path, not by file
+    # list), and a stale count could keep the collect path past
+    # QUERY_BATCH_MAX.
+    return caches.key(
+        kind, queries.sparkSession, (queries,), (queries,), params
+    )
 
 
 def query_batch_count(queries: DataFrame) -> int:
     """Row count of the query frame, capped at QUERY_BATCH_MAX + 1
     (exact when ≤ QUERY_BATCH_MAX — limit returns every row there —
-    and 'too big' otherwise, which is all the guard needs)."""
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
+    and 'too big' otherwise, which is all the guard needs): one scalar
+    count job per distinct query frame per session, limit-bounded so a
+    frame just over the threshold costs a short-circuit partial scan,
+    not a full extra pass."""
+    return caches.get_or_build(
+        _query_key("query_count", queries),
+        lambda: queries.limit(QUERY_BATCH_MAX + 1).count(),
     )
-    if key not in _QUERY_COUNT_CACHE:
-        _QUERY_COUNT_CACHE[key] = queries.limit(
-            QUERY_BATCH_MAX + 1
-        ).count()
-    return _QUERY_COUNT_CACHE[key]
-
-
-# (appId, queries plan hash, input-file snapshot, cols) → collected
-# query batch. The query side is the BROADCAST side by construction (a
-# query workload, not the corpus — enforced by the QUERY_BATCH_MAX guard
-# above); collecting it driver-side is the same data movement as
-# F.broadcast, cached per session like the centroid/codebook artifacts.
-# Same round-10 staleness fix as _QUERY_COUNT_CACHE: a re-read of a
-# grown staging dir must not serve the OLD collected batch.
-_QUERY_BATCH_CACHE: dict[tuple, list] = {}
 
 
 def _collected_queries(
     queries: DataFrame, query_id_col: str, query_vec_col: str
 ) -> list[tuple[int, list[float]]]:
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
-        query_id_col,
-        query_vec_col,
-    )
-    if key not in _QUERY_BATCH_CACHE:
-        _QUERY_BATCH_CACHE[key] = [
+    """The collected query batch. The query side is the BROADCAST side by
+    construction (bounded by the QUERY_BATCH_MAX guard); collecting it
+    driver-side is the same data movement as F.broadcast, memoized so
+    the kernels of one batch share one collect."""
+    return caches.get_or_build(
+        _query_key("query_batch", queries, query_id_col, query_vec_col),
+        lambda: [
             (int(r[0]), [float(x) for x in r[1]])
             for r in queries.select(
                 query_id_col, F.col(query_vec_col).cast("array<double>")
             ).collect()
-        ]
-    return _QUERY_BATCH_CACHE[key]
-
-
-_QLABEL_MAP_CACHE: dict[tuple, dict] = {}
+        ],
+    )
 
 
 def _collected_qlabel_map(
@@ -356,29 +289,18 @@ def _collected_qlabel_map(
     """{query_id: label} for the bounded kernels' in-kernel IDSelector
     routing — collected from the QUERIES frame itself (the caller joined
     the query's label on as ``qlabel_col``), under the same
-    QUERY_BATCH_MAX contract as the query vectors (round 13: the label
-    rides the distributed query frame end to end; this collect is the
-    bounded-batch materialization of it, not a separate driver-side
-    source of truth — oversized batches never reach it because the
-    kernels' Catalyst fallbacks filter on the COLUMN instead).
-
-    Memoized per (appId, semanticHash, file snapshot) exactly like
-    _collected_queries (advice r13: the uncached form paid one extra
-    Spark job over the query frame on EVERY bounded filtered serving
-    call); registered in caches._cache_dicts."""
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
-        query_id_col,
-        qlabel_col,
-    )
-    if key not in _QLABEL_MAP_CACHE:
-        _QLABEL_MAP_CACHE[key] = {
+    QUERY_BATCH_MAX contract as the query vectors: oversized batches
+    never reach it because the kernels' Catalyst fallbacks filter on the
+    COLUMN instead. Memoized like _collected_queries: uncached, every
+    bounded filtered serving call paid one extra Spark job over the
+    query frame."""
+    return caches.get_or_build(
+        _query_key("qlabel_map", queries, query_id_col, qlabel_col),
+        lambda: {
             int(r[0]): r[1]
             for r in queries.select(query_id_col, qlabel_col).collect()
-        }
-    return _QLABEL_MAP_CACHE[key]
+        },
+    )
 
 
 class _TopRAcc:

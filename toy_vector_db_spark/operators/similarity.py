@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.arrowkit import (
     list_col_to_matrix,
     matrix_to_list_array,
@@ -116,11 +117,9 @@ KMEANS_ITERS = 3
 TRAIN_SAMPLE = 4096
 
 
-# (appId, base plan hash, id_col, vec_col) → the collected training sample.
-# IVF training and PQ training share the same sample; without the cache
-# each trainer re-ran the scan+orderBy+collect job (~1 s of per-session
-# overhead charged to whichever build key ran second).
-_SAMPLE_CACHE: dict[tuple, list] = {}
+def _base_key(kind: str, base: DataFrame, id_col: str, vec_col: str) -> tuple:
+    """Store key of a per-base artifact: (appId, base plan hash, cols)."""
+    return caches.key(kind, base.sparkSession, (base,), params=(id_col, vec_col))
 
 
 def _train_sample(
@@ -131,22 +130,20 @@ def _train_sample(
     regardless of corpus size, the same bounded driver-side build as the
     codebook collect the round-2 verdict blessed. At 100 TB everything
     that scales with the corpus (assignment, search, encoding) stays
-    distributed; only this fixed-size sample ever reaches the driver."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _SAMPLE_CACHE:
-        _SAMPLE_CACHE[key] = [
+    distributed; only this fixed-size sample ever reaches the driver.
+    IVF and PQ training share it; unmemoized, each trainer re-ran the
+    scan+orderBy+collect job (~1 s charged to whichever build ran
+    second)."""
+    return caches.get_or_build(
+        _base_key("train_sample", base, id_col, vec_col),
+        lambda: [
             (int(r[0]), [float(x) for x in r[1]])
             for r in base.where(F.col(id_col) < TRAIN_SAMPLE)
             .select(id_col, F.col(vec_col).cast("array<double>"))
             .orderBy(id_col)
             .collect()
-        ]
-    return _SAMPLE_CACHE[key]
+        ],
+    )
 
 
 def trained_centroids(
@@ -222,17 +219,6 @@ def trained_centroids(
     )
 
 
-# (appId, plan hash, n, iters) → (collected trained centroids, the
-# literal DataFrame built from them). Training is a multi-stage job, run
-# once per session; consumers broadcast the 16-row literal table with
-# zero lineage. The DataFrame is memoized ALONGSIDE the rows (round 14):
-# createDataFrame-per-call handed every consumer a fresh RDD-backed plan
-# whose semanticHash differed call-to-call, which silently defeated any
-# downstream plan-keyed session cache (the probe-routing cache missed on
-# every serving call and re-paid its bounded collect).
-_TRAINED_CACHE: dict[tuple, tuple] = {}
-
-
 def cached_trained_centroids(
     base: DataFrame,
     n: int = N_CENTROIDS,
@@ -240,32 +226,32 @@ def cached_trained_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
+    """Trained centroids as a literal DataFrame, trained once per
+    session; consumers broadcast the 16-row table with zero lineage. The
+    DataFrame itself is memoized (round 14): a createDataFrame per call
+    handed every consumer a fresh RDD-backed plan whose semanticHash
+    differed call to call, which defeated every downstream plan-keyed
+    memo."""
     spark = base.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        base.semanticHash(),
-        n,
-        iters,
-        id_col,
-        vec_col,
-    )
-    if key not in _TRAINED_CACHE:
+
+    def build():
         rows = (
             trained_centroids(base, n, iters, id_col, vec_col)
             .orderBy("centroid_id")
             .collect()
         )
-        vals = [
-            (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])
-            for r in rows
-        ]
-        _TRAINED_CACHE[key] = (
-            vals,
-            spark.createDataFrame(
-                vals, "centroid_id bigint, centroid_vec array<double>"
-            ),
+        return spark.createDataFrame(
+            [
+                (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])
+                for r in rows
+            ],
+            "centroid_id bigint, centroid_vec array<double>",
         )
-    return _TRAINED_CACHE[key][1]
+
+    return caches.get_or_build(
+        caches.key("trained", spark, (base,), params=(n, iters, id_col, vec_col)),
+        build,
+    )
 
 
 def ivf_assign(base: DataFrame, cents: DataFrame,
@@ -302,39 +288,33 @@ def ivf_assign(base: DataFrame, cents: DataFrame,
     )
 
 
-# (appId, base plan hash, id_col, vec_col) → persisted (id, centroid_id)
-# frame under the TRAINED quantizer. The assignment is part of the index
-# artifact — at 100 TB it is the partition-key column WRITTEN with the
-# codes at build time — so recomputing the base×C argmin on every search
-# would charge a build cost to the query path. Same session-cache pattern
-# as _CODES_CACHE.
-_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_trained_assign(
     base: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _ASSIGN_CACHE:
+    """Persisted (id, centroid_id) frame under the TRAINED quantizer. The
+    assignment is part of the index artifact — at 100 TB it is the
+    partition-key column WRITTEN with the codes at build time — so
+    recomputing the base×C argmin per search would charge a build cost
+    to the query path. When the session already holds the serving-side
+    cell table (``cached_cell_vectors``, a superset of these rows: the
+    inner join on the id keeps every (id, centroid_id) pair), this is a
+    projection of that persisted frame, taken at lookup time so it never
+    outlives the table's storage; otherwise it is built and persisted on
+    its own."""
+    k = _base_key("assign", base, id_col, vec_col)
+    cv = caches.peek(caches.sibling(k, "cell_vectors"))
+    if cv is not None and caches.peek(k) is None:
+        return cv.select(id_col, "centroid_id")
+
+    def build():
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-        a = ivf_assign(base, cents, id_col, vec_col).select(
+        return ivf_assign(base, cents, id_col, vec_col).select(
             id_col, "centroid_id"
-        ).persist()
-        a.count()
-        _ASSIGN_CACHE[key] = a
-    return _ASSIGN_CACHE[key]
+        )
 
-
-# (appId, base plan hash, id_col, vec_col) → persisted codes⋈assign frame:
-# the cell-partitioned compressed corpus an IVF-PQ index build writes.
-_CODES_CELLS_CACHE: dict[tuple, DataFrame] = {}
+    return caches.get_or_build(k, build)
 
 
 def cached_codes_cells(
@@ -342,25 +322,14 @@ def cached_codes_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    """Persisted codes⋈assign frame: the cell-partitioned compressed
+    corpus an IVF-PQ index build writes."""
+    return caches.get_or_build(
+        _base_key("codes_cells", base, id_col, vec_col),
+        lambda: pq_codes(base, id_col, vec_col).join(
+            cached_trained_assign(base, id_col, vec_col), id_col
+        ),
     )
-    if key not in _CODES_CELLS_CACHE:
-        codes = pq_codes(base, id_col, vec_col)
-        assign = cached_trained_assign(base, id_col, vec_col)
-        cc = codes.join(assign, id_col).persist()
-        cc.count()
-        _CODES_CELLS_CACHE[key] = cc
-    return _CODES_CELLS_CACHE[key]
-
-
-# (appId, base plan hash, id_col, vec_col) → path of the WRITTEN cell-
-# partitioned codes table (parquet, partitionBy centroid_id) — the actual
-# on-disk index artifact the docstrings describe. Written once per session.
-_WRITTEN_INDEX_CACHE: dict[tuple, str] = {}
 
 
 def written_codes_cells(
@@ -382,13 +351,9 @@ def written_codes_cells(
     from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
     spark = base.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _WRITTEN_INDEX_CACHE:
+    k = _base_key("written_index", base, id_col, vec_col)
+
+    def build():
         # path derives from the CONTENT key (plan hash + column names,
         # NOT the app id): the codes are deterministic for a given plan,
         # so a later session overwrites the directory with identical
@@ -396,9 +361,7 @@ def written_codes_cells(
         # applicationId; distinct plans/columns still get distinct dirs
         # (a plan-hash-only path would let different column choices
         # overwrite each other while a live frame still lazily reads it)
-        import hashlib
-
-        tag = hashlib.md5(repr(key[1:]).encode()).hexdigest()[:12]
+        tag = hashlib.md5(repr(k[2] + k[4]).encode()).hexdigest()[:12]
         path = os.path.join(FIXTURE_DIR, "sink_out", "ivfpq_index", tag)
         # repartition on the partition column BEFORE the write (round 12,
         # verdict r11 item 4 — the ivfpq_build decomposition): without
@@ -413,14 +376,9 @@ def written_codes_cells(
         cached_codes_cells(base, id_col, vec_col).repartition(
             N_CENTROIDS, "centroid_id"
         ).write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-        _WRITTEN_INDEX_CACHE[key] = path
-    return spark.read.parquet(_WRITTEN_INDEX_CACHE[key])
+        return path
 
-
-# (appId, base plan hash, id_col) → base-split row count, for the
-# scale-aware rerank budget. One count per session against the (persisted)
-# codes/base lineage — a scalar, not a data collect.
-_COUNT_CACHE: dict[tuple, int] = {}
+    return spark.read.parquet(caches.get_or_build(k, build))
 
 
 def _rerank_budget(base: DataFrame, k: int, id_col: str = "vec_id") -> int:
@@ -440,15 +398,12 @@ def _rerank_budget(base: DataFrame, k: int, id_col: str = "vec_id") -> int:
     is the knob that scales. Ceil-division and min/max are integer-exact
     in both engines; the oracle computes the identical budget via a
     count(*) scalar subquery with LEAST/GREATEST
-    (oracles_similarity.rerank_budget_sql)."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
+    (oracles_similarity.rerank_budget_sql). The base row count is
+    counted once per session: a scalar, not a data collect."""
+    n = caches.get_or_build(
+        caches.key("count", base.sparkSession, (base,), params=(id_col,)),
+        base.count,
     )
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = base.count()
-    n = _COUNT_CACHE[key]
     return max(RERANK_MULT * k, min(-(-n // RERANK_DEN), RERANK_CAP))
 
 
@@ -513,44 +468,25 @@ def _ivf_probes(
     )
 
 
-# (appId, probes plan hash, input snapshot, id col) → {query_id:
-# [centroid_id, ...]} — the driver-side probe routing of a BOUNDED query
-# batch. Round 14: every bounded IVF-family serving call re-collected
-# this per call (one full Spark job over the probe frame — profiled at
-# ~0.5 s of each key's ~1.1 s driver-side construction, more than some
-# keys' executor time). The routing is deterministic given the trained
-# centroids and the query frame, both already session-cached, so it is
-# memoized per (appId, semanticHash, file snapshot) exactly like
-# knn._collected_queries / _collected_qlabel_map; bounded by the same
-# QUERY_BATCH_MAX contract (nq·nprobe ints). Registered in
-# caches._cache_dicts.
-_PROBE_ROUTING_CACHE: dict[tuple, dict] = {}
-
-
 def _collected_probe_routing(
     probes: DataFrame, query_id_col: str
 ) -> dict[int, list]:
-    from toy_vector_db_spark.operators.knn import _input_snapshot
+    """{query_id: [centroid_id, ...]}: the driver-side probe routing of a
+    BOUNDED query batch (nq·nprobe ints, the QUERY_BATCH_MAX contract).
+    Memoized per query frame like knn._collected_queries: re-collected
+    per call it cost one Spark job over the probe frame, ~0.5 s of each
+    IVF-family key's ~1.1 s driver-side construction (round 14)."""
+    from toy_vector_db_spark.operators import knn as KNN
 
-    key = (
-        probes.sparkSession.sparkContext.applicationId,
-        probes.semanticHash(),
-        _input_snapshot(probes),
-        query_id_col,
-    )
-    if key not in _PROBE_ROUTING_CACHE:
+    def build():
         routing: dict[int, list] = {}
         for r in probes.select(query_id_col, "centroid_id").collect():
             routing.setdefault(int(r[0]), []).append(int(r[1]))
-        _PROBE_ROUTING_CACHE[key] = routing
-    return _PROBE_ROUTING_CACHE[key]
+        return routing
 
-
-# (appId, base plan hash, labels plan hash) → persisted per-label
-# cell-hit histogram: a BUILD-time artifact (written beside the
-# centroids at 100 TB), so serving never recomputes the assign⋈labels
-# aggregate per query batch.
-_LABEL_HIST_CACHE: dict[tuple, DataFrame] = {}
+    return caches.get_or_build(
+        KNN._query_key("probe_routing", probes, query_id_col), build
+    )
 
 
 def cached_label_cell_hist(
@@ -559,18 +495,16 @@ def cached_label_cell_hist(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        labels.semanticHash(),
-        id_col,
-        vec_col,
+    """Persisted per-label cell-hit histogram: a BUILD-time artifact
+    (written beside the centroids at 100 TB), so serving never recomputes
+    the assign⋈labels aggregate per query batch."""
+    return caches.get_or_build(
+        caches.key(
+            "label_hist", base.sparkSession, (base, labels),
+            params=(id_col, vec_col),
+        ),
+        lambda: label_cell_hist(base, labels, id_col, vec_col),
     )
-    if key not in _LABEL_HIST_CACHE:
-        h = label_cell_hist(base, labels, id_col, vec_col).persist()
-        h.count()
-        _LABEL_HIST_CACHE[key] = h
-    return _LABEL_HIST_CACHE[key]
 
 
 def label_cell_hist(
@@ -661,57 +595,33 @@ def _ivf_probes_labeled(
     ).select(query_id_col, query_vec_col, "_q_mag", "centroid_id")
 
 
-# (appId, base plan hash, id_col, vec_col) → persisted serving-side base
-# table (id, vec, _v_mag, centroid_id). At 100 TB this IS the stored base
-# table — vectors written partitioned by centroid_id with their norms at
-# index-build time — so a search never re-joins the cell assignment (or
-# re-folds magnitudes) at query time. Round-6 verdict item 7: the
-# per-search base⋈assign join charged index-build work to every query.
-_CELL_VECTORS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_cell_vectors(
     base: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _CELL_VECTORS_CACHE:
-        # build the serving table in ONE materializing job (round 15):
-        # the previous shape first persisted+counted the bare assignment
-        # frame, then persisted+counted this join of it — two sequential
-        # jobs over the same corpus inside the ivf_train build key. The
-        # assignment rides inline here, and the _ASSIGN_CACHE entry
-        # becomes a projection of this persisted frame (identical rows:
-        # the inner join on the id preserves every (id, centroid_id)
-        # pair), so consumers that only need the assignment scan the
-        # same cached storage.
+    """Persisted serving-side base table (id, vec, _v_mag, centroid_id).
+    At 100 TB this IS the stored base table — vectors written
+    partitioned by centroid_id with their norms at index-build time — so
+    a search never re-joins the cell assignment (or re-folds magnitudes)
+    at query time. Built in ONE materializing job (round 15): the
+    assignment rides inline, and ``cached_trained_assign`` projects this
+    frame instead of persisting its own."""
+
+    def build():
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
         assign = ivf_assign(base, cents, id_col, vec_col).select(
             id_col, "centroid_id"
         )
-        cv = (
+        return (
             base.withColumn("_v_mag", V.magnitude(vec_col))
             .join(assign, id_col)
             .select(id_col, vec_col, "_v_mag", "centroid_id")
-            .persist()
         )
-        cv.count()
-        _CELL_VECTORS_CACHE[key] = cv
-        akey = (
-            base.sparkSession.sparkContext.applicationId,
-            base.semanticHash(),
-            id_col,
-            vec_col,
-        )
-        if akey not in _ASSIGN_CACHE:
-            _ASSIGN_CACHE[akey] = cv.select(id_col, "centroid_id")
-    return _CELL_VECTORS_CACHE[key]
+
+    return caches.get_or_build(
+        _base_key("cell_vectors", base, id_col, vec_col), build
+    )
 
 
 def knn_ivf(
@@ -910,11 +820,6 @@ def _sq_dist(a, b) -> "F.Column":
     )
 
 
-# (appId, plan hash) → persisted normalized-vector frame. Normalization is
-# (appId, plan hash, cols) → trained per-subspace PQ codebooks
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-
-
 def trained_pq_codebooks(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -933,15 +838,17 @@ def trained_pq_codebooks(
     distances accumulate (x−y)² left-to-right over the slice axis, member
     means fold in id order, argmin ties to the smallest codeword id —
     every op bit-identical to the old Catalyst fold form and to the
-    DuckDB kmeans_chain oracle (asserted in tests at every SF)."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    DuckDB kmeans_chain oracle (asserted in tests at every SF). Trained
+    once per session."""
+    return caches.get_or_build(
+        _base_key("pq_books", base, id_col, vec_col),
+        lambda: _train_pq_codebooks(base, id_col, vec_col),
     )
-    if key in _PQ_BOOKS_CACHE:
-        return _PQ_BOOKS_CACHE[key]
+
+
+def _train_pq_codebooks(
+    base: DataFrame, id_col: str, vec_col: str
+) -> list[list[list[float]]]:
     rows = _train_sample(base, id_col, vec_col)
     NV = np.array(
         [_py_normalize(v) for _, v in rows], dtype=np.float64
@@ -981,11 +888,7 @@ def trained_pq_codebooks(
                 bm.append([float(x) for x in a / len(members)])
             new_books.append(bm)
         books = new_books
-    _PQ_BOOKS_CACHE[key] = books
     return books
-
-
-_CODES_CACHE: dict[tuple, DataFrame] = {}
 
 
 def pq_codes(
@@ -1001,19 +904,12 @@ def pq_codes(
     the fold-form expression the DuckDB oracle evaluates. The codes
     frame persists per session: it IS the index artifact (a parquet
     index table at 100 TB), and every ADC search scans it."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    return caches.get_or_build(
+        _base_key("codes", base, id_col, vec_col),
+        lambda: encode_codes(
+            base, trained_pq_codebooks(base, id_col, vec_col), id_col, vec_col
+        ),
     )
-    if key in _CODES_CACHE:
-        return _CODES_CACHE[key]
-    books = trained_pq_codebooks(base, id_col, vec_col)
-    codes = encode_codes(base, books, id_col, vec_col).persist()
-    codes.count()
-    _CODES_CACHE[key] = codes
-    return codes
 
 
 def encode_codes(
@@ -1226,44 +1122,24 @@ def _attach_labels(
     )
 
 
-# (appId, queries plan hash, input snapshot, cols, books fingerprint) →
-# (qids int64 array, [per-subspace (n_q, K) LUT arrays]). Round 14: every
-# bounded PQ serving call rebuilt the ADC lookup tables driver-side —
-# profiled at 0.18-0.28 s of numpy (the parity cumsum fold over an
-# (n_q, K, sub) transient) per call — although they are deterministic
-# from the collected query batch and the trained codebooks, both already
-# session-cached. Memoized per the _collected_queries key plus a content
-# fingerprint of the codebooks (books come from _PQ_BOOKS_CACHE, but a
-# frozen-quantizer caller may pass its own list — fingerprinting the
-# CONTENT, not the object id, so a caller with different codebooks can
-# never hit another quantizer's entry). Round 15 (advice r14): the
-# fingerprint is the array shape + a sha256 digest of the bytes — the
-# round-14 hash(bytes) was Python's salted 64-bit hash, under which a
-# collision (improbable, not impossible) would have silently served
-# another codebook's LUTs. Bounded by the same QUERY_BATCH_MAX contract
-# as the query batch itself. Registered in caches._cache_dicts.
-_PQ_LUT_CACHE: dict[tuple, tuple] = {}
-
-
 def _collected_pq_luts(
     queries: DataFrame,
     books: list,
     query_id_col: str,
     query_vec_col: str,
 ) -> tuple:
+    """(qids int64 array, [per-subspace (n_q, K) LUT arrays]) of a
+    bounded query batch. Rebuilt per call, the LUTs cost 0.18-0.28 s of
+    driver-side numpy (round 14) although they are deterministic from the
+    collected batch and the codebooks. Memoized per query frame plus the
+    codebooks' CONTENT (shape + sha256 of the bytes), not their object
+    id: a frozen-quantizer caller may pass its own list, and must never
+    hit another quantizer's entry."""
     from toy_vector_db_spark.operators import knn as KNN
 
     b_arr = np.array(books)  # (M, K, sub)
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        KNN._input_snapshot(queries),
-        query_id_col,
-        query_vec_col,
-        b_arr.shape,
-        hashlib.sha256(b_arr.tobytes()).digest(),
-    )
-    if key not in _PQ_LUT_CACHE:
+
+    def build():
         qrows = KNN._collected_queries(queries, query_id_col, query_vec_col)
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
         X = np.array([r[1] for r in qrows], dtype=np.float64)
@@ -1281,8 +1157,15 @@ def _collected_pq_luts(
             vm = nv[:, m * sub: (m + 1) * sub]
             diff = vm[:, None, :] - b_arr[m][None, :, :]
             luts.append(np.cumsum(diff * diff, axis=2)[:, :, -1])  # (n_q, K)
-        _PQ_LUT_CACHE[key] = (qids, luts)
-    return _PQ_LUT_CACHE[key]
+        return qids, luts
+
+    return caches.get_or_build(
+        KNN._query_key(
+            "pq_lut", queries, query_id_col, query_vec_col, b_arr.shape,
+            hashlib.sha256(b_arr.tobytes()).digest(),
+        ),
+        build,
+    )
 
 
 def _pq_pair_adc(
@@ -1929,10 +1812,6 @@ def _as_double(vec_col: str) -> "F.Column":
     return F.col(vec_col).cast("array<double>")
 
 
-# (appId, plan hash, cols) → persisted one-row per-dim bounds frame
-_SQ_BOUNDS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def sq_bounds(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -1978,19 +1857,11 @@ def cached_sq_bounds(
 ) -> DataFrame:
     """Session-cached persisted bounds row (the trained_centroids idiom):
     the one-pass min/max scan runs once per distinct base plan per
-    session; every serving call reuses the persisted one-row frame.
-    Registered in caches.py for bench snapshot/rollback."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    session; every serving call reuses the persisted one-row frame."""
+    return caches.get_or_build(
+        _base_key("sq_bounds", base, id_col, vec_col),
+        lambda: sq_bounds(base, id_col, vec_col),
     )
-    if key not in _SQ_BOUNDS_CACHE:
-        b = sq_bounds(base, id_col, vec_col).persist()
-        b.count()  # materialize NOW — the caller is the build step
-        _SQ_BOUNDS_CACHE[key] = b
-    return _SQ_BOUNDS_CACHE[key]
 
 
 def _sq_code_expr(x, mn, mx):
@@ -2425,10 +2296,6 @@ BQ2_HI = 0.75  # reconstruction levels, fractions of the per-dim max |nv|
 BQ2_LO = 0.25
 
 
-# (appId, plan hash, cols) → persisted one-row per-dim |nv| max frame
-_BQ2_BOUNDS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def bq2_bounds(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -2456,18 +2323,11 @@ def cached_bq2_bounds(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Session-cached persisted BQ2 bounds row (the cached_sq_bounds
-    idiom); registered in caches.py for bench snapshot/rollback."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    idiom)."""
+    return caches.get_or_build(
+        _base_key("bq2_bounds", base, id_col, vec_col),
+        lambda: bq2_bounds(base, id_col, vec_col),
     )
-    if key not in _BQ2_BOUNDS_CACHE:
-        b = bq2_bounds(base, id_col, vec_col).persist()
-        b.count()
-        _BQ2_BOUNDS_CACHE[key] = b
-    return _BQ2_BOUNDS_CACHE[key]
 
 
 def bq2_code_array(
@@ -2638,11 +2498,6 @@ def bq2_upsert(
     return existing.unionByName(new_codes), bounds
 
 
-# (appId, plan hash, cols) → persisted cell-keyed BQ2 codes — the IVF-BQ2
-# index artifact, the cached_sq_cells idiom on the 2-bit family
-_BQ2_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_bq2_cells(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -2652,24 +2507,14 @@ def cached_bq2_cells(
     index artifact: 2-bit codes keyed by the SAME trained coarse cell
     every sibling composition uses (one consistent coarse quantizer per
     serving stack), i.e. what a 100 TB build WRITES partitioned by
-    centroid_id at 16 B/vector inside each cell directory."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    centroid_id at 16 B/vector inside each cell directory. The
+    cached_sq_cells idiom on the 2-bit family."""
+    return caches.get_or_build(
+        _base_key("bq2_cells", base, id_col, vec_col),
+        lambda: bq2_code_array(
+            base, cached_bq2_bounds(base, id_col, vec_col), id_col, vec_col
+        ).join(cached_trained_assign(base, id_col, vec_col), id_col),
     )
-    if key not in _BQ2_CELLS_CACHE:
-        bounds = cached_bq2_bounds(base, id_col, vec_col)
-        assign = cached_trained_assign(base, id_col, vec_col)
-        bc = (
-            bq2_code_array(base, bounds, id_col, vec_col)
-            .join(assign, id_col)
-            .persist()
-        )
-        bc.count()
-        _BQ2_CELLS_CACHE[key] = bc
-    return _BQ2_CELLS_CACHE[key]
 
 
 def knn_ivfbq2(
@@ -2826,12 +2671,6 @@ def knn_ivfbq2(
     )
 
 
-# (appId, plan hash, cols) → persisted cell-keyed SQ codes — the IVF-SQ
-# index artifact (codes ⋈ coarse-cell assignment), the cached_codes_cells
-# idiom for the fourth family
-_SQ_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_sq_cells(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -2842,27 +2681,14 @@ def cached_sq_cells(
     100 TB build WRITES partitioned by centroid_id (64 B/vector inside
     each cell directory). Derives from the SAME cached trained centroids
     and frozen bounds the sibling caches use, so a mixed-family serving
-    stack probes one consistent coarse quantizer."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    stack probes one consistent coarse quantizer: a mixed-family session
+    computes the base×C argmin scan once, not per fine quantizer."""
+    return caches.get_or_build(
+        _base_key("sq_cells", base, id_col, vec_col),
+        lambda: sq_code_array(
+            base, cached_sq_bounds(base, id_col, vec_col), id_col, vec_col
+        ).join(cached_trained_assign(base, id_col, vec_col), id_col),
     )
-    if key not in _SQ_CELLS_CACHE:
-        bounds = cached_sq_bounds(base, id_col, vec_col)
-        # the SAME session-cached assignment cached_codes_cells serves
-        # from — a mixed-family session (bench runs both) computes the
-        # base×C argmin scan once, not per fine quantizer
-        assign = cached_trained_assign(base, id_col, vec_col)
-        sc = (
-            sq_code_array(base, bounds, id_col, vec_col)
-            .join(assign, id_col)
-            .persist()
-        )
-        sc.count()
-        _SQ_CELLS_CACHE[key] = sc
-    return _SQ_CELLS_CACHE[key]
 
 
 def ivfsq_upsert(
@@ -3069,10 +2895,6 @@ def knn_ivfsq(
     )
 
 
-# (appId, plan hash, cols) → persisted cell-keyed BQ code frame
-_BQ_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_bq_cells(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -3086,18 +2908,12 @@ def cached_bq_cells(
     from the shared session-cached assignment alone: a mixed-family
     serving stack computes the base×C argmin scan ONCE for IVF-PQ,
     IVF-SQ, and IVF-BQ together."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    return caches.get_or_build(
+        _base_key("bq_cells", base, id_col, vec_col),
+        lambda: bq_codes(base, id_col, vec_col).join(
+            cached_trained_assign(base, id_col, vec_col), id_col
+        ),
     )
-    if key not in _BQ_CELLS_CACHE:
-        assign = cached_trained_assign(base, id_col, vec_col)
-        bc = bq_codes(base, id_col, vec_col).join(assign, id_col).persist()
-        bc.count()
-        _BQ_CELLS_CACHE[key] = bc
-    return _BQ_CELLS_CACHE[key]
 
 
 def knn_ivfbq(

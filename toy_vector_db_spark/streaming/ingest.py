@@ -21,6 +21,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
 
@@ -52,10 +53,53 @@ def _stream_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
     return d
 
 
-# (appId, sf_dir, lo, hi) → sink dir of an already-drained ingest: the
-# stream is drained once per session; reruns read the written artifact —
-# exactly how a long-lived ingest pipeline's consumers behave.
-_INGEST_CACHE: dict[tuple, str] = {}
+def _drained(spark: SparkSession, kind: str, sf_dir: str, lo: int, hi: int,
+             process, params=(), setup=None) -> str:
+    """Sink dir of the arriving slice (lo ≤ vec_id < hi) drained through
+    ``process`` once per micro-batch (readStream → foreachBatch,
+    availableNow). The stream is drained once per session; reruns read
+    the written artifact — exactly how a long-lived ingest pipeline's
+    consumers behave. ``setup(sink)`` seeds the fresh sink first."""
+
+    def build():
+        tag = os.path.basename(os.path.normpath(sf_dir))
+        sink = os.path.join(
+            FIXTURE_DIR, "sink_out", kind, tag, f"{lo}_{hi}"
+        )
+        if os.path.exists(sink):
+            shutil.rmtree(sink)
+        os.makedirs(sink, exist_ok=True)
+        if setup is not None:
+            setup(sink)
+
+        src_dir = _stream_embeddings_dir(spark, sf_dir)
+        schema = spark.read.parquet(src_dir).schema
+        arriving = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+            .where(f"vec_id >= {lo} AND vec_id < {hi}")
+        )
+
+        def _process(batch_df: DataFrame, _batch_id: int) -> None:
+            if not batch_df.isEmpty():
+                process(batch_df, sink)
+
+        q = (
+            arriving.writeStream.foreachBatch(_process)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sink
+
+    return caches.get_or_build(
+        caches.key(kind, spark, params=(sf_dir, lo, hi) + tuple(params)),
+        build,
+    )
 
 
 def stream_ingest_codes(
@@ -74,45 +118,16 @@ def stream_ingest_codes(
     frame read back from the sink."""
     from toy_vector_db_spark.operators import similarity
 
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi)
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_ingest", tag, f"{lo}_{hi}"
+    def process(batch_df: DataFrame, sink: str) -> None:
+        codes = similarity.encode_codes(batch_df, books)
+        assign = similarity.ivf_assign(batch_df, cents).select(
+            "vec_id", "centroid_id"
         )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
+        codes.join(assign, "vec_id").write.mode("append").parquet(sink)
 
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            codes = similarity.encode_codes(batch_df, books)
-            assign = similarity.ivf_assign(batch_df, cents).select(
-                "vec_id", "centroid_id"
-            )
-            codes.join(assign, "vec_id").write.mode("append").parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    return spark.read.parquet(
+        _drained(spark, "stream_ingest", sf_dir, lo, hi, process)
+    )
 
 
 def stream_ingest_sq_codes(
@@ -136,44 +151,15 @@ def stream_ingest_sq_codes(
     ingested (vec_id, codes) frame read back from the sink."""
     from toy_vector_db_spark.operators import similarity
 
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, "sq")
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_sq", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
+    def process(batch_df: DataFrame, sink: str) -> None:
+        batch = batch_df.select("vec_id", "embedding")
+        similarity.sq_code_array(batch, bounds).write.mode(
+            "append"
+        ).parquet(sink)
 
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.select("vec_id", "embedding")
-            similarity.sq_code_array(batch, bounds).write.mode(
-                "append"
-            ).parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    return spark.read.parquet(
+        _drained(spark, "stream_sq", sf_dir, lo, hi, process)
+    )
 
 
 def stream_ingest_bq2_codes(
@@ -194,44 +180,15 @@ def stream_ingest_bq2_codes(
     exactly."""
     from toy_vector_db_spark.operators import similarity
 
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, "bq2")
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_bq2", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
+    def process(batch_df: DataFrame, sink: str) -> None:
+        batch = batch_df.select("vec_id", "embedding")
+        similarity.bq2_code_array(batch, bounds).write.mode(
+            "append"
+        ).parquet(sink)
 
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.select("vec_id", "embedding")
-            similarity.bq2_code_array(batch, bounds).write.mode(
-                "append"
-            ).parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    return spark.read.parquet(
+        _drained(spark, "stream_bq2", sf_dir, lo, hi, process)
+    )
 
 
 def stream_ingest_hnsw(
@@ -264,20 +221,7 @@ def stream_ingest_hnsw(
 
     from toy_vector_db_spark.operators import hnsw as H
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, lo, hi,
-        "hnsw", num_partitions,
-    )
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_hnsw", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        pdir = os.path.join(sink, "parted")
-        edir = os.path.join(sink, "edges")
-
+    def setup(sink: str) -> None:
         initial = spark.read.parquet(
             os.path.join(sf_dir, "embeddings.parquet")
         ).where(f"vec_id < {lo}")
@@ -287,54 +231,38 @@ def stream_ingest_hnsw(
         )
         parted0.select("vec_id", "embedding", "part").write.partitionBy(
             "part"
-        ).parquet(pdir)
-        edges0.write.partitionBy("part").parquet(edir)
+        ).parquet(os.path.join(sink, "parted"))
+        edges0.write.partitionBy("part").parquet(os.path.join(sink, "edges"))
 
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
+    def process(batch_df: DataFrame, sink: str) -> None:
+        pdir = os.path.join(sink, "parted")
+        edir = os.path.join(sink, "edges")
+        batch = batch_df.select("vec_id", "embedding")
+        parted = spark.read.parquet(pdir)
+        edges = spark.read.parquet(edir)
+        _, e2 = H.hnsw_upsert(parted, edges, batch, num_partitions)
+        touched = [
+            int(r[0])
+            for r in H._with_part(batch, num_partitions, "vec_id")
+            .select("part").distinct().collect()
+        ]
+        # rewrite ONLY the touched shard partitions of the edge table
+        (
+            e2.where(F.col("part").isin(touched))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("part")
+            .parquet(edir)
+        )
+        (
+            H._with_part(batch, num_partitions, "vec_id")
+            .write.mode("append").partitionBy("part").parquet(pdir)
         )
 
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.select("vec_id", "embedding")
-            parted = spark.read.parquet(pdir)
-            edges = spark.read.parquet(edir)
-            _, e2 = H.hnsw_upsert(parted, edges, batch, num_partitions)
-            touched = [
-                int(r[0])
-                for r in H._with_part(batch, num_partitions, "vec_id")
-                .select("part").distinct().collect()
-            ]
-            # rewrite ONLY the touched shard partitions of the edge table
-            (
-                e2.where(F.col("part").isin(touched))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("part")
-                .parquet(edir)
-            )
-            (
-                H._with_part(batch, num_partitions, "vec_id")
-                .write.mode("append").partitionBy("part").parquet(pdir)
-            )
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    sink = _INGEST_CACHE[key]
+    sink = _drained(
+        spark, "stream_hnsw", sf_dir, lo, hi, process,
+        params=(num_partitions,), setup=setup,
+    )
     return (
         spark.read.parquet(os.path.join(sink, "parted")),
         spark.read.parquet(os.path.join(sink, "edges")),

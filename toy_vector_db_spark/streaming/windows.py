@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.rounding import rnd
 from pyspark.sql import types as T
 
@@ -48,27 +49,19 @@ def _stream_input_dir(sf_dir: str) -> str:
     return d
 
 
-# (appId, staged dir, file snapshot) → the inferred events schema. Every
-# streaming key re-ran a batch parquet read (driver-side listing +
-# footer) per call just to hand readStream its schema; the schema is a
-# pure function of the staged file (round 14, the registry._TABLE_CACHE
-# discipline). Registered in caches._cache_dicts.
-_STREAM_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_vector_db_spark.registry import _path_snapshot
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     d = _stream_input_dir(sf_dir)
-    skey = (
-        spark.sparkContext.applicationId,
-        d,
-        _path_snapshot(os.path.join(d, "events.parquet")),
+    # the inferred schema is a pure function of the staged file: memoized
+    # per file snapshot instead of a batch parquet read (driver-side
+    # listing + footer) per call just to hand readStream its schema
+    raw_schema = caches.get_or_build(
+        caches.key(
+            "stream_schema", spark,
+            files=(os.path.join(d, "events.parquet"),), params=(d,),
+        ),
+        lambda: spark.read.parquet(d).schema,
     )
-    if skey not in _STREAM_SCHEMA_CACHE:
-        _STREAM_SCHEMA_CACHE[skey] = spark.read.parquet(d).schema
-    raw_schema = _STREAM_SCHEMA_CACHE[skey]
     raw = spark.readStream.schema(raw_schema).parquet(d)
     if isinstance(raw.schema["ts"].dataType, T.LongType):
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
