@@ -248,7 +248,7 @@ def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
 
 
 def test_fallback_values_match_kernel_ivfpq(spark, embeddings, monkeypatch):
-    """knn_ivfpq's bounded-batch path (kernel ADC with driver-collected
+    """knn_ivfpq's bounded-batch path (kernel ADC with driver-side
     probe routing) vs its oversized broadcast-LUT plan: bit-identical,
     including the filtered variant's label predicate applied on the
     kernel's pair output."""

@@ -1586,3 +1586,28 @@ def test_assign_survives_cell_vectors_eviction(spark, sf_dir):
     plan = explain.formatted_plan(assign)
     assert "InMemoryTableScan" in plan, plan
     caches.restore(snap)
+
+
+def test_ivfpq_int_ids_build_and_match_bigint(spark, embeddings):
+    """An int id column builds the IVF-PQ index and serves the same
+    neighbours as the bigint form. The PQ encode kernel declares its id
+    column long; an int id passed through as int32 Arrow data used to
+    fail the build (ArrowColumnVector.getLong UNSUPPORTED_CALL)."""
+    wide = embeddings.select("vec_id", "embedding")
+    narrow = embeddings.select(
+        F.col("vec_id").cast("int").alias("vec_id"), "embedding"
+    )
+    assert dict(narrow.dtypes)["vec_id"] == "int"
+    qs = embeddings.where(F.col("vec_id") < 6).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+    def hits(base):
+        return sorted(
+            (int(r["query_id"]), int(r["vec_id"]), r["dist"], r["rank"])
+            for r in similarity.knn_ivfpq(base, qs, 10).collect()
+        )
+
+    want = hits(wide)
+    assert len(want) == 60
+    assert hits(narrow) == want

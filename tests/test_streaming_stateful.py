@@ -175,3 +175,31 @@ def test_late_data_staged_mtimes_are_load_bearing(spark, sf_dir, tmp_path):
         map(tuple, windows.streaming_late_data_counts(spark, sf_dir).collect())
     )
     assert a == b and len(a) > 0
+
+
+def test_drain_restores_shuffle_partitions_before_draining(
+    spark, sf_dir, monkeypatch
+):
+    """The state-partition count is set for the stream's start() only:
+    by the time the stream drains, the session reads its own
+    shuffle-partition value again, while the stream keeps the count it
+    started with."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    state_parts = int(before) + 1
+    seen = []
+    drain = StreamingQuery.processAllAvailable
+
+    def spy(self):
+        seen.append(spark.conf.get(key))
+        drain(self)
+        seen.append(self.lastProgress["stateOperators"][0]["numShufflePartitions"])
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", spy)
+    agg = windows._events_stream(spark, sf_dir).groupBy("event_type").count()
+    out = windows._drain_to_memory(agg, "complete", state_partitions=state_parts)
+    assert seen == [before, state_parts]
+    assert spark.conf.get(key) == before
+    assert out.count() > 0

@@ -53,11 +53,11 @@ PERSISTED = frozenset({
     "minhash_pairs", "packed_index",
 })
 BOUNDED = frozenset({
-    "query_count", "query_batch", "qlabel_map", "probe_routing", "pq_lut",
+    "query_count", "query_batch", "qlabel_map", "pq_lut",
 })
-# A full bench.py headline run (warmup + 3 timed passes) peaks at 10
-# entries of one bounded kind (probe_routing; measured at sf0.01), so 64
-# keeps every warm repeated-query hit a hit.
+# A full bench.py headline run (warmup + 3 timed passes) peaks at 6
+# entries of one bounded kind (query_count and query_batch; measured at
+# sf0.01), so 64 keeps every warm repeated-query hit a hit.
 QUERY_LRU = 64
 
 

@@ -255,14 +255,19 @@ def _query_key(kind: str, queries: DataFrame, *params) -> tuple:
 def query_batch_count(queries: DataFrame) -> int:
     """Row count of the query frame, capped at QUERY_BATCH_MAX + 1
     (exact when ≤ QUERY_BATCH_MAX — limit returns every row there —
-    and 'too big' otherwise, which is all the guard needs): one scalar
-    count job per distinct query frame per session, limit-bounded so a
-    frame just over the threshold costs a short-circuit partial scan,
-    not a full extra pass."""
-    return caches.get_or_build(
-        _query_key("query_count", queries),
-        lambda: queries.limit(QUERY_BATCH_MAX + 1).count(),
-    )
+    and 'too big' otherwise, which is all the guard needs). A
+    driver-local frame (``isLocal()``: its rows already sit on the
+    driver, e.g. one built from a pandas batch) is counted from those
+    rows with no Spark job; any other frame costs one scalar count job
+    per distinct query frame per session, limit-bounded so a frame just
+    over the threshold costs a short-circuit partial scan, not a full
+    extra pass."""
+
+    def build():
+        capped = queries.limit(QUERY_BATCH_MAX + 1)
+        return len(capped.collect()) if queries.isLocal() else capped.count()
+
+    return caches.get_or_build(_query_key("query_count", queries), build)
 
 
 def _collected_queries(

@@ -415,7 +415,10 @@ def _ivf_probes(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """The nprobe nearest cells per query: (query_id, query_vec, _q_mag,
-    centroid_id), nprobe rows per query. Shared by knn_ivf and knn_ivfpq.
+    centroid_id), nprobe rows per query — the distributed routing of
+    oversized batches (the IVF family), knn_ivfbq and routed HNSW.
+    Bounded batches route on the driver with ``_probe_routing``, which
+    selects the same cells (parity-tested in tests/test_probe_routing.py).
 
     Zero-shuffle routing (round-6 verdict item 7): the C centroids
     collapse into ONE array-of-structs row (the lsh_hyperplane_buckets
@@ -468,25 +471,144 @@ def _ivf_probes(
     )
 
 
-def _collected_probe_routing(
-    probes: DataFrame, query_id_col: str
-) -> dict[int, list]:
-    """{query_id: [centroid_id, ...]}: the driver-side probe routing of a
-    BOUNDED query batch (nq·nprobe ints, the QUERY_BATCH_MAX contract).
-    Memoized per query frame like knn._collected_queries: re-collected
-    per call it cost one Spark job over the probe frame, ~0.5 s of each
-    IVF-family key's ~1.1 s driver-side construction (round 14)."""
-    from toy_vector_db_spark.operators import knn as KNN
+def _centroid_matrix(cents: DataFrame) -> tuple:
+    """(centroid ids int64 (C,), vectors float64 (C, d), magnitudes (C,))
+    of a centroid frame: a build artifact, collected once per distinct
+    frame (C rows). The magnitudes are the j-order left fold of
+    ``V.magnitude``, so the driver router scores with the doubles
+    ``_ivf_probes`` computes."""
 
     def build():
-        routing: dict[int, list] = {}
-        for r in probes.select(query_id_col, "centroid_id").collect():
-            routing.setdefault(int(r[0]), []).append(int(r[1]))
-        return routing
+        rows = cents.select(
+            "centroid_id", F.col("centroid_vec").cast("array<double>")
+        ).collect()
+        ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+        C = np.array([[float(x) for x in r[1]] for r in rows])
+        mag = np.zeros(len(rows))
+        for j in range(C.shape[1]):
+            mag += C[:, j] * C[:, j]
+        return ids, C, np.sqrt(mag)
 
     return caches.get_or_build(
-        KNN._query_key("probe_routing", probes, query_id_col), build
+        caches.key("centroid_matrix", cents.sparkSession, (cents,)), build
     )
+
+
+def _label_cells(hist: DataFrame) -> dict:
+    """{label: (centroid ids, label-row counts)} of a label-cell
+    histogram (``label_cell_hist``): a build artifact of at most
+    n_labels·C rows, collected once per distinct histogram frame. A null
+    label is left out — it equals no query label, as in the SQL join."""
+
+    def build():
+        cells: dict = {}
+        for r in hist.select("label", "centroid_id", "cnt").collect():
+            if r[0] is not None:
+                cells.setdefault(r[0], []).append((int(r[1]), int(r[2])))
+        return {
+            lab: (
+                np.array([c for c, _ in cs], dtype=np.int64),
+                np.array([n for _, n in cs], dtype=np.int64),
+            )
+            for lab, cs in cells.items()
+        }
+
+    return caches.get_or_build(
+        caches.key("label_cells", hist.sparkSession, (hist,)), build
+    )
+
+
+def _probe_routing(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    hist: DataFrame | None = None,
+    r_target: int = 0,
+    labeled: DataFrame | None = None,
+    qlabel_col: str | None = None,
+) -> dict[int, list]:
+    """{query_id: [centroid_id, ...]}: the probe routing of a BOUNDED
+    query batch (the QUERY_BATCH_MAX contract), computed on the driver
+    in one numpy pass over the collected batch and the centroid matrix —
+    no Spark job once both are held (a driver-local query frame collects
+    without one).
+
+    Same selection, same doubles as the distributed ``_ivf_probes``:
+    dots and magnitudes are j-order left folds from 0.0 (one rounding
+    per op, no FMA), qd = 1 − max(0, dot / (|q|·|c|)), cells ranked by
+    (qd, centroid_id) and the first ``nprobe`` kept. With ``hist`` it is
+    ``_ivf_probes_labeled`` instead: each query's label is read from
+    ``labeled`` (the queries joined with their labels, as
+    ``qlabel_col``; the kernels collect the same map), only the cells
+    holding that label are ranked, and a cell is kept while it is among
+    the first ``nprobe`` or the label rows of the cells ranked before it
+    number fewer than ``r_target``.
+    Lists are in rank order. A zero |q|·|c| divisor raises, as the SQL
+    division does under ANSI mode, instead of routing on NaN."""
+    from toy_vector_db_spark.operators import knn as KNN
+
+    qrows = KNN._collected_queries(queries, query_id_col, query_vec_col)
+    cids, C, cmag = _centroid_matrix(cents)
+    if not qrows:
+        return {}
+    qids = np.array([r[0] for r in qrows], dtype=np.int64)
+    Q = np.array([r[1] for r in qrows], dtype=np.float64)
+    qmag = np.zeros(len(qids))
+    for j in range(Q.shape[1]):
+        qmag += Q[:, j] * Q[:, j]
+    # zip_with pads the shorter vector with nulls the fold counts as
+    # 0.0: the dot runs over the shared dims only
+    dot = np.zeros((len(qids), len(cids)))
+    for j in range(min(Q.shape[1], C.shape[1])):
+        dot += Q[:, j: j + 1] * C[:, j][None, :]
+    den = np.sqrt(qmag)[:, None] * cmag[None, :]
+
+    def dists(qi, ci):
+        d = den[qi, ci]
+        zero = d == 0.0
+        if zero.any():
+            i = np.broadcast_to(qi, d.shape)[zero][0]
+            raise ZeroDivisionError(
+                f"[DIVIDE_BY_ZERO] probe routing: query {int(qids[i])} "
+                "or a centroid it is scored against has zero magnitude"
+            )
+        return 1.0 - np.maximum(dot[qi, ci] / d, 0.0)
+
+    routing: dict[int, list] = {}
+    if hist is None:
+        qd = dists(np.arange(len(qids))[:, None], np.arange(len(cids)))
+        ranked = np.lexsort((np.broadcast_to(cids, qd.shape), qd))
+        for i, order in enumerate(ranked[:, :nprobe]):
+            if len(order):
+                routing.setdefault(int(qids[i]), []).extend(
+                    cids[order].tolist()
+                )
+        return routing
+    qlabels = KNN._collected_qlabel_map(labeled, query_id_col, qlabel_col)
+    cells = _label_cells(hist)
+    pos = {int(c): i for i, c in enumerate(cids)}
+    for qid in dict.fromkeys(int(q) for q in qids):
+        lab = qlabels.get(qid)
+        if lab is None or lab not in cells:
+            continue
+        hc, hn = cells[lab]
+        held = np.isin(hc, cids)  # the inner join with the centroid table
+        if not held.any():
+            continue
+        ci = np.array([pos[int(c)] for c in hc[held]], dtype=np.int64)
+        # every batch row with this id is ranked together, like the
+        # per-query_id window of the SQL form
+        qi = np.nonzero(qids == qid)[0]
+        qd = dists(np.repeat(qi, len(ci)), np.tile(ci, len(qi)))
+        c_id = np.tile(cids[ci], len(qi))
+        cnt = np.tile(hn[held], len(qi))
+        order = np.lexsort((c_id, qd))
+        cum_prev = np.concatenate(([0], np.cumsum(cnt[order])[:-1]))
+        keep = (np.arange(len(order)) < nprobe) | (cum_prev < r_target)
+        routing[qid] = c_id[order][keep].tolist()
+    return routing
 
 
 def cached_label_cell_hist(
@@ -595,6 +717,27 @@ def _ivf_probes_labeled(
     ).select(query_id_col, query_vec_col, "_q_mag", "centroid_id")
 
 
+def _probes_frame(
+    queries: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    query_labels: DataFrame | None,
+    label_hist: DataFrame | None,
+    r_target: int,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """The distributed probe frame (query_id, query_vec, _q_mag,
+    centroid_id): label-aware when a histogram is given. Built only for
+    oversized batches; bounded ones route with ``_probe_routing``."""
+    if label_hist is not None:
+        return _ivf_probes_labeled(
+            queries, cents, query_labels, label_hist, nprobe, r_target,
+            query_id_col, query_vec_col,
+        )
+    return _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
+
+
 def cached_cell_vectors(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -669,8 +812,8 @@ def knn_ivf(
     elif cents is None:
         cents = centroids_df(base, n_centroids, id_col, vec_col)
 
-    # probe routing lands driver-side (nq×nprobe scalars — the query
-    # batch is bounded by construction): the union of probed cells
+    # probe routing is computed driver-side (``_probe_routing`` over the
+    # collected batch — bounded by construction): the union of probed cells
     # becomes a LITERAL IN-filter on the cell column — on the written
     # cell-partitioned layout that is static partition pruning, stronger
     # than the DPP the broadcast-join form relied on — and the per-query
@@ -680,16 +823,18 @@ def knn_ivf(
     # ~25 µs/pair vs ~1 µs in the vectorized kernel, bit-identical).
     from toy_vector_db_spark.operators import knn as KNN
 
-    probes = _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
     if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
         # GUARD (round 7, verdict item 4): a corpus-sized query frame must
-        # not route through the driver (nq×nprobe rows collected below).
+        # not route through the driver (the batch is collected below).
         # Fallback: join the probe frame to the cell table on centroid_id
         # — no broadcast hint on either side (the query side is big; AQE
         # picks the join strategy), distance inline with the same hoisted
         # magnitudes, identical values. The probed-cells scan filter is
         # still applied: the DISTINCT probed cell set is bounded by C
         # (= n_centroids, 16), not by nq, so that collect stays scalar.
+        probes = _ivf_probes(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
         probed_cells = sorted(
             int(r[0])
             for r in probes.select("centroid_id").distinct().collect()
@@ -706,7 +851,9 @@ def knn_ivf(
             query_id_col, id_col, "dist"
         )
     else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
+        cells_by_query = _probe_routing(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
         probed_cells = sorted(
             {c for cs in cells_by_query.values() for c in cs}
         )
@@ -942,8 +1089,11 @@ def encode_codes(
     sub = len(books[0][0])
     b_arr = np.array(books)  # (M, K, sub)
     par = df.sparkSession.sparkContext.defaultParallelism
+    # the id is cast to the bigint the output schema declares: an int
+    # id passed through as int32 Arrow data fails the long column read
     src = df.repartition(par, id_col).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("_vd")
+        F.col(id_col).cast("bigint").alias(id_col),
+        F.col(vec_col).cast("array<double>").alias("_vd"),
     )
 
     def _encode(batches):
@@ -1555,29 +1705,15 @@ def knn_ivfpq(
 
     if books is None:
         books = trained_pq_codebooks(base, id_col, vec_col)
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
     from toy_vector_db_spark.operators import knn as KNN
 
     if KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX:
         # round 10 (verdict r9 item 6): bounded batches score through
-        # the base-side _pq_pair_adc kernel — probe routing collected
-        # driver-side (the knn_ivf idiom; nq·nprobe ints), queries +
-        # LUTs in the closure. Removes the query-side LUT Python stage
-        # and its broadcast join from the serving plan; bit-identical.
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = codes_cells.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = queries, None, None
+        # the base-side _pq_pair_adc kernel — probe routing computed
+        # driver-side (the knn_ivf idiom), queries + LUTs in the
+        # closure. Removes the query-side LUT Python stage and its
+        # broadcast join from the serving plan; bit-identical.
+        src, q_in, label_name, qlabel_name = codes_cells, queries, None, None
         if labels is not None:
             # distributed IDSelector (round 12 in-kernel, round 13
             # distributed): the label rides the codes frame (a stored
@@ -1588,6 +1724,14 @@ def knn_ivfpq(
             src, q_in, label_name, qlabel_name = _attach_labels(
                 src, labels, id_col, queries, query_labels, query_id_col
             )
+        cells_by_query = _probe_routing(
+            queries, cents, nprobe, query_id_col, query_vec_col,
+            label_hist, int(rerank_r), q_in, qlabel_name,
+        )
+        probed_cells = sorted(
+            {c for cs in cells_by_query.values() for c in cs}
+        )
+        src = src.where(F.col("centroid_id").isin(probed_cells))
         cand = _pq_pair_adc(
             src, q_in, books, id_col, query_id_col, query_vec_col,
             cells_by_query=cells_by_query,
@@ -1601,6 +1745,10 @@ def knn_ivfpq(
         # (nprobe rows per query): rebuilding the tiny LUT nprobe×
         # beats a separate probes⋈luts shuffle join of two
         # driver-adjacent frames — one less exchange pair per search
+        probes = _probes_frame(
+            queries, cents, nprobe, query_labels, label_hist, int(rerank_r),
+            query_id_col, query_vec_col,
+        )
         probe_luts = _adc_lut_frame(
             probes, books, query_id_col, query_vec_col,
             keep_cols=("centroid_id",),
@@ -2584,19 +2732,14 @@ def knn_ivfbq2(
         "centroid_id",
         _bq2_recon("codes", "mx").alias("recon"),
     )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
     if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
         # no-collect fallback (the knn_ivf guard): probe frame joined on
         # centroid_id, reconstruction cosine inline; the probed-cell
         # IN-filter collect is bounded by C, not nq
+        probes = _probes_frame(
+            queries, cents, nprobe, query_labels, label_hist, int(rerank_r),
+            query_id_col, query_vec_col,
+        )
         probed_cells = sorted(
             int(r[0])
             for r in probes.select("centroid_id").distinct().collect()
@@ -2632,12 +2775,7 @@ def knn_ivfbq2(
             )
         )
     else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = recon.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = queries, None, None
+        src, q_in, label_name, qlabel_name = recon, queries, None, None
         if labels is not None:
             # distributed IDSelector (round 12 in-kernel, round 13
             # distributed) — the knn_ivfpq shape: label attached to the
@@ -2646,6 +2784,14 @@ def knn_ivfbq2(
             src, q_in, label_name, qlabel_name = _attach_labels(
                 src, labels, id_col, queries, query_labels, query_id_col
             )
+        cells_by_query = _probe_routing(
+            queries, cents, nprobe, query_id_col, query_vec_col,
+            label_hist, int(rerank_r), q_in, qlabel_name,
+        )
+        probed_cells = sorted(
+            {c for cs in cells_by_query.values() for c in cs}
+        )
+        src = src.where(F.col("centroid_id").isin(probed_cells))
         cand = KNN.pair_scores(
             src,
             q_in,
@@ -2816,19 +2962,14 @@ def knn_ivfsq(
     nq = queries.select(
         query_id_col, _normalize(_as_double_sql(query_vec_col)).alias("qnv")
     )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
     if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
         # no-collect fallback (the knn_ivf guard): probe frame joined on
         # centroid_id, ADC inline; the DISTINCT probed-cell IN-filter is
         # bounded by C, not nq, so that collect stays scalar
+        probes = _probes_frame(
+            queries, cents, nprobe, query_labels, label_hist, int(rerank_r),
+            query_id_col, query_vec_col,
+        )
         probed_cells = sorted(
             int(r[0])
             for r in probes.select("centroid_id").distinct().collect()
@@ -2860,18 +3001,21 @@ def knn_ivfsq(
             )
         )
     else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = deq.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = nq, None, None
+        src, q_in, label_name, qlabel_name = deq, nq, None, None
         if labels is not None:
             # distributed IDSelector (round 12 in-kernel, round 13
             # distributed) — the knn_ivfpq shape
             src, q_in, label_name, qlabel_name = _attach_labels(
                 src, labels, id_col, nq, query_labels, query_id_col
             )
+        cells_by_query = _probe_routing(
+            queries, cents, nprobe, query_id_col, query_vec_col,
+            label_hist, int(rerank_r), q_in, qlabel_name,
+        )
+        probed_cells = sorted(
+            {c for cs in cells_by_query.values() for c in cs}
+        )
+        src = src.where(F.col("centroid_id").isin(probed_cells))
         cand = _sq_pair_adc(
             src,
             q_in,
@@ -2982,15 +3126,10 @@ def knn_ivfbq(
         _bq_pack(query_vec_col, 1).alias("q_hi"),
         _bq_pack(query_vec_col, BQ_HALF + 1).alias("q_lo"),
     )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
+    probes = _probes_frame(
+        queries, cents, nprobe, query_labels, label_hist, int(rerank_r),
+        query_id_col, query_vec_col,
+    )
     probes_sel = probes.select(query_id_col, "centroid_id")
     src_cells = bq_cells
     if labels is not None:

@@ -109,10 +109,11 @@ def _drain_to_memory(
 
     ``state_partitions`` (round 15): the shuffle-partition conf in force
     at ``start()`` becomes the query's state-store partition count for
-    its whole lifetime; set it for the stream only and restore the
-    session value afterwards. Aggregation results are partition-count
-    independent (the driver already verifies these queries at several
-    core counts)."""
+    its whole lifetime; set it for the stream only. ``start()`` clones
+    the session (conf included) before it returns, so the session value
+    is restored right after it, not held for the whole drain. Aggregation
+    results are partition-count independent (the driver already
+    verifies these queries at several core counts)."""
     spark = agg.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     prev = None
@@ -126,13 +127,13 @@ def _drain_to_memory(
             .queryName(name)
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name)
 
 
