@@ -11,6 +11,7 @@ agree cell for cell, ties included.
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators import knn, similarity
 
@@ -95,6 +96,17 @@ def test_routing_matches_sql_with_duplicate_centroid_vectors(spark):
     for qi in range(4):  # a query equal to a duplicated vector
         twins = sorted(int(ids[i]) for i in (qi, 15 - qi))
         assert got[qi] == twins
+
+
+def test_routing_matches_sql_on_trained_fixture_centroids(spark, embeddings):
+    """Trained centroids over the fixture corpus, routed for the
+    corpus's own last rows."""
+    cents = similarity.cached_trained_centroids(embeddings)
+    qs = embeddings.where(F.col("vec_id") >= 450).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    _assert_same_routing(qs, cents, nprobes=(1, 4, 16))
 
 
 def test_labeled_routing_matches_sql(spark):

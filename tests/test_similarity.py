@@ -2,6 +2,8 @@
 retain high recall vs exact (clustered fixtures route most true neighbors
 into probed cells)."""
 
+import math
+
 from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators import evaluation, knn, similarity
@@ -115,51 +117,48 @@ def test_ivfpq_equivalence_and_recall(spark, embeddings):
     assert rec >= floor, f"IVF-PQ mean recall@10 = {rec}"
 
 
-def test_pq_codes_arrow_kernel_equals_fold_form(spark, embeddings):
-    """pq_codes builds with a numpy mapInArrow kernel; the interpreted
-    Catalyst fold form (array_min over (sq_dist, k) structs — the shape
-    the DuckDB oracle mirrors) must produce the SAME codes bit-for-bit:
-    np.cumsum is the same sequential left fold, np.argmin the same
-    first-min tie-break."""
-    from pyspark.sql import functions as FF
+def _py_normalized(vec):
+    """Pure-Python v / ‖v‖: the magnitude is a j-order fold from 0.0,
+    then an elementwise divide — the op order of the engine's
+    _normalize and of the DuckDB oracle."""
+    acc = 0.0
+    for x in vec:
+        acc += x * x
+    mag = math.sqrt(acc)
+    return [x / mag for x in vec]
 
+
+def _py_sq_dist(a, b):
+    """Pure-Python squared euclidean, a j-order fold from 0.0."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) * (x - y)
+    return acc
+
+
+def test_pq_codes_arrow_kernel_equals_fold_form(spark, embeddings):
+    """pq_codes builds with a numpy mapInArrow kernel; a pure-Python fold
+    reference (normalize, then per subspace the j-order squared distance
+    to every codeword, first minimum — the shape the DuckDB oracle
+    mirrors) must produce the SAME codes: np.cumsum is the same
+    sequential left fold, np.argmin the same first-min tie-break."""
     n = embeddings.count()
     cut = split_count(n, 0.95)
     base = embeddings.where(F.col("vec_id") < cut)
     books = similarity.trained_pq_codebooks(base)
     sub = len(books[0][0])
-    # Catalyst fold-form normalization (the shape the oracle mirrors):
-    # magnitude fold materialized as an aliased column, then elementwise
-    # divide — the reference the kernel's in-pass normalization must match
-    v = FF.col("embedding").cast("array<double>")
-    mag = FF.sqrt(
-        FF.aggregate(
-            FF.zip_with(v, v, lambda x, y: x * y),
-            FF.lit(0.0),
-            lambda acc, x: acc + FF.coalesce(x, FF.lit(0.0)),
-        )
-    )
-    nb = base.select(
-        "vec_id", v.alias("_vd"), mag.alias("_m")
-    ).select(
-        "vec_id",
-        FF.transform("_vd", lambda x: x / FF.col("_m")).alias("_nv"),
-    )
-    cols = [FF.col("vec_id")]
-    for m in range(similarity.PQ_M):
-        v_m = FF.slice(FF.col("_nv"), m * sub + 1, sub)
-        cands = FF.array(*[
-            FF.struct(
-                similarity._sq_dist(v_m, FF.lit(books[m][k])).alias("d"),
-                FF.lit(k).alias("k"),
+    fold = {}
+    for r in base.select("vec_id", "embedding").collect():
+        nv = _py_normalized(r["embedding"])
+        fold[r["vec_id"]] = tuple(
+            min(
+                range(similarity.PQ_K),
+                key=lambda k: _py_sq_dist(
+                    nv[m * sub: (m + 1) * sub], books[m][k]
+                ),
             )
-            for k in range(similarity.PQ_K)
-        ])
-        cols.append(FF.array_min(cands).getField("k").cast("int").alias(f"c{m}"))
-    fold = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(similarity.PQ_M))
-        for r in nb.select(*cols).collect()
-    }
+            for m in range(similarity.PQ_M)
+        )
     kernel = {
         r["vec_id"]: tuple(r[f"c{m}"] for m in range(similarity.PQ_M))
         for r in similarity.pq_codes(base).collect()
@@ -393,12 +392,11 @@ def test_streaming_sq_ingest_equals_batch_upsert(spark, sf_dir):
 
 def test_adc_lut_kernel_equals_fold_form(spark, embeddings):
     """_adc_lut_frame (round 6) computes the ADC lookup tables in an Arrow
-    kernel; the Catalyst fold form — aggregate over zip_with squared diffs
-    on the normalized query slices, the shape the DuckDB oracle evaluates —
-    must produce the SAME doubles bit-for-bit (np.cumsum is the same
-    sequential left fold; normalization the same magnitude fold)."""
-    from pyspark.sql import functions as FF
-
+    kernel; a pure-Python fold reference — j-order squared diffs of the
+    normalized query slices against every codeword, the shape the DuckDB
+    oracle evaluates — must produce the SAME doubles bit-for-bit
+    (np.cumsum is the same sequential left fold; normalization the same
+    magnitude fold)."""
     n = embeddings.count()
     cut = split_count(n, 0.95)
     base = embeddings.where(F.col("vec_id") < cut)
@@ -413,33 +411,16 @@ def test_adc_lut_kernel_equals_fold_form(spark, embeddings):
         )
         for r in similarity._adc_lut_frame(qs, books).collect()
     }
-    v = FF.col("query_vec").cast("array<double>")
-    mag = FF.sqrt(
-        FF.aggregate(
-            FF.zip_with(v, v, lambda x, y: x * y),
-            FF.lit(0.0),
-            lambda acc, x: acc + FF.coalesce(x, FF.lit(0.0)),
-        )
-    )
-    nq = qs.select("query_id", v.alias("_qv"), mag.alias("_m")).select(
-        "query_id",
-        FF.transform("_qv", lambda x: x / FF.col("_m")).alias("_nqv"),
-    )
-    cols = [FF.col("query_id")]
-    for m in range(similarity.PQ_M):
-        qsl = FF.slice(FF.col("_nqv"), m * sub + 1, sub)
-        cols.append(
-            FF.array(*[
-                similarity._sq_dist(qsl, FF.lit(books[m][kk]))
+    fold = {}
+    for r in qs.collect():
+        nq = _py_normalized(r["query_vec"])
+        fold[r["query_id"]] = tuple(
+            tuple(
+                _py_sq_dist(nq[m * sub: (m + 1) * sub], books[m][kk])
                 for kk in range(similarity.PQ_K)
-            ]).alias(f"_lut{m}")
+            )
+            for m in range(similarity.PQ_M)
         )
-    fold = {
-        r["query_id"]: tuple(
-            tuple(r[f"_lut{m}"]) for m in range(similarity.PQ_M)
-        )
-        for r in nq.select(*cols).collect()
-    }
     assert fold == kernel
 
 
@@ -1471,14 +1452,12 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
     codes = similarity.sq_code_array(base, bounds)
     deq = codes.crossJoin(F.broadcast(bounds)).select(
         "vec_id",
-        similarity._sq_deq(
-            F.col("codes"), F.col("mins"), F.col("maxs")
-        ).alias("deq"),
+        similarity._sq_deq("codes", "mins", "maxs").alias("deq"),
     ).repartition(16)
     nq = qs.select(
         "query_id",
         similarity._normalize(
-            similarity._as_double("query_vec")
+            similarity._as_double_sql("query_vec")
         ).alias("qnv"),
     )
     r = 12
@@ -1496,9 +1475,7 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
     deqc = sq_cells.crossJoin(F.broadcast(bounds)).select(
         "vec_id",
         "centroid_id",
-        similarity._sq_deq(
-            F.col("codes"), F.col("mins"), F.col("maxs")
-        ).alias("deq"),
+        similarity._sq_deq("codes", "mins", "maxs").alias("deq"),
     ).repartition(16)
     probes = similarity._ivf_probes(qs, cents, similarity.N_PROBE)
     routing: dict[int, list] = {}

@@ -1217,9 +1217,9 @@ def _valid_int_label(label_col: str):
     distinct labels into one graph) while accepting int-valued doubles
     (2.0)."""
     as_int = F.col(label_col).try_cast("int")
-    as_dbl = F.col(label_col).try_cast("double")
-    return as_int.isNotNull() & as_dbl.isNotNull() & (
-        as_dbl == as_int.cast("double")
+    as_double = F.col(label_col).try_cast("double")
+    return as_int.isNotNull() & as_double.isNotNull() & (
+        as_double == as_int.cast("double")
     )
 
 

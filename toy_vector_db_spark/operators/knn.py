@@ -36,6 +36,7 @@ from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.arrowkit import list_col_to_matrix
 
 from toy_vector_db_spark.functions import vector as V
+from toy_vector_db_spark.functions.vector import _sql_dot_fold, _sql_ident
 
 
 def _py_magnitude(vec) -> float:
@@ -61,31 +62,39 @@ def with_distance(
     Perf: the query magnitude is a CONSTANT, but Catalyst does not fold
     aggregate() over literal arrays, so the naive V.distance() would
     recompute it per row — precompute it driver-side (bit-identically) and
-    inline as a literal. Row magnitudes are computed once per row.
+    inline as a literal. Row magnitudes are computed once per row. The
+    whole distance is one SQL text parsed in one py4j call; it is not
+    memoized, since every fresh query vector would add an entry.
     """
-    q = _lit_vec(query_vec)
-    q_mag = F.lit(_py_magnitude(query_vec))
-    v = F.col(vec_col)
-    sim = F.greatest(F.lit(0.0), V.dot(v, q) / (V.magnitude(v) * q_mag))
-    return df.withColumn(dist_col, F.lit(1.0) - sim)
+    v = _sql_ident(vec_col)
+    q_mag = _sql_double_lit(_py_magnitude(query_vec))
+    return df.withColumn(dist_col, F.expr(
+        f"1.0D - greatest(0.0D, {_sql_dot_fold(v, _lit_vec(query_vec))}"
+        f" / (sqrt({_sql_dot_fold(v, v)}) * {q_mag}))"
+    ))
 
 
-def _lit_vec(vec) -> "F.Column":
-    """Literal array<double> column for a query vector. F.lit(list)
-    builds the array one element-literal py4j call at a time — measured
-    136 ms for a 64-dim vector, most of knn_exact_single's construction
-    — while the equivalent SQL array literal parses JVM-side in one
-    call (~1 ms). Not memoized: every fresh query vector would add an
-    entry, for a ~1 ms saving. repr() is the shortest round-tripping
-    decimal (it keeps the sign of -0.0) and SQL's double parse is
-    correctly rounded, so the literal is bit-identical (pinned in
-    tests/test_expr_fastpath.py); non-finite values (no fixture or
-    serving path produces them) fall back to F.lit."""
-    vals = [float(x) for x in vec]
-    if not all(math.isfinite(x) for x in vals):
-        return F.lit(vals).cast("array<double>")
-    return F.expr(
-        "CAST(array(" + ", ".join(f"{x!r}D" for x in vals)
+def _sql_double_lit(x: float) -> str:
+    """SQL double literal that parses to exactly ``x``: repr() is the
+    shortest round-tripping decimal (it keeps the sign of -0.0) and SQL's
+    double parse is correctly rounded; NaN and ±inf have no decimal form
+    and go through a string cast."""
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _lit_vec(vec) -> str:
+    """SQL array<double> literal for a query vector, bit-identical to
+    ``F.lit(vec).cast("array<double>")`` (non-finite values included;
+    pinned in tests/test_expr_fastpath.py). F.lit(list) builds the array
+    one element-literal py4j call at a time — measured 136 ms for a
+    64-dim vector, most of knn_exact_single's construction — while the
+    SQL text parses JVM-side in one call (~1 ms)."""
+    return (
+        "CAST(array("
+        + ", ".join(_sql_double_lit(float(x)) for x in vec)
         + ") AS ARRAY<DOUBLE>)"
     )
 

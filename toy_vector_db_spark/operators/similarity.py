@@ -42,7 +42,12 @@ from toy_vector_db_spark.functions.arrowkit import (
 from toy_vector_db_spark.functions.rounding import rnd
 
 from toy_vector_db_spark.functions import vector as V
-from toy_vector_db_spark.functions.vector import _cached_expr, _sql_ident
+from toy_vector_db_spark.functions.vector import (
+    _cached_expr,
+    _sql_dot_fold,
+    _sql_fold,
+    _sql_ident,
+)
 
 ROUND = 6
 N_CENTROIDS = 16
@@ -440,18 +445,9 @@ def _ivf_probes(
     q_m = queries.withColumn("_q_mag", V.magnitude(query_vec_col))
 
     # the whole rank-slice column as ONE memoized JVM-parsed expression
-    # (round 14): the per-call Column form — a transform lambda whose
-    # body builds a dot fold against the lambda variable's struct
-    # fields — cost ~0.14 s of py4j round-trips on EVERY IVF-family
-    # serving call. Same expression term by term (same lambda body,
-    # same struct field names/order, same array_sort/slice), results
-    # bit-identical (oracle-pinned).
-    dot_sql = (
-        "aggregate(zip_with("
-        f"CAST({_sql_ident(query_vec_col)} AS ARRAY<DOUBLE>), "
-        "CAST(c.centroid_vec AS ARRAY<DOUBLE>), (x, y) -> x * y), "
-        "0.0D, (acc, x) -> acc + coalesce(x, 0.0D))"
-    )
+    # (round 14): a transform lambda whose body folds the query vector
+    # against each centroid struct (oracle-pinned)
+    dot_sql = _sql_dot_fold(_sql_ident(query_vec_col), "c.centroid_vec")
     probes_expr = _cached_expr(
         ("ivfprobes", query_vec_col, nprobe),
         "slice(array_sort(transform(_cents, c -> named_struct("
@@ -893,7 +889,7 @@ PQ_M = 8  # subspaces (round 6: 4 → 8, see the knob comment at the top)
 PQ_K = 256
 
 
-def _normalize(v) -> "F.Column":
+def _normalize(v: str) -> "F.Column":
     """v / ‖v‖ as an expression — after this, squared euclidean is
     2 − 2·cos: rank-equivalent to cosine distance, which is what makes
     euclidean PQ-ADC a valid index for the engine's cosine metric.
@@ -903,37 +899,21 @@ def _normalize(v) -> "F.Column":
     whole magnitude fold for every element (interpreted HOFs get no
     subexpression elimination).
 
-    str args (a SQL fragment, e.g. ``_as_double_sql(col)``) take the
-    memoized one-py4j-call F.expr path (round 14 — the three Python
-    lambdas here cost ~60 py4j round-trips per serving call); the SQL
-    text mirrors the Column form term by term, results bit-identical
-    (tests pin both forms)."""
-    if isinstance(v, str):
-        return _cached_expr(("norm", v), _normalize_sql(v))
-    mag = F.sqrt(
-        F.aggregate(
-            F.zip_with(v, v, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
-        )
-    )
-    return F.zip_with(
-        v, F.array_repeat(mag, F.size(v)), lambda x, m: x / m
-    )
-
-
-def _normalize_sql(v: str) -> str:
-    return (
-        f"zip_with({v}, array_repeat(sqrt(aggregate(zip_with({v}, {v}, "
-        "(x, y) -> x * y), 0.0D, (acc, x) -> acc + coalesce(x, 0.0D))), "
-        f"size({v})), (x, m) -> x / m)"
+    ``v`` is a SQL fragment over an array<double>, normally
+    ``_as_double_sql(col)``; the parsed expression is memoized per
+    fragment (one py4j call instead of ~60 for three Python lambdas)."""
+    return _cached_expr(
+        ("norm", v),
+        f"zip_with({v}, array_repeat(sqrt({_sql_fold(v, v, 'x * y')}), "
+        f"size({v})), (x, m) -> x / m)",
     )
 
 
 def _as_double_sql(vec_col: str) -> str:
-    """SQL-fragment twin of _as_double for the memoized F.expr paths.
-    The caller-supplied name is backtick-quoted when it is not a plain
-    identifier (advice r14), matching F.col's binding."""
+    """array<float> → array<double> BEFORE any arithmetic, as a SQL
+    fragment — the SQ family's cross-engine bit-parity hinges on every
+    product being a double×double (DuckDB's ::DOUBLE[] cast happens
+    first; a float32 product differs in the last bits)."""
     return f"CAST({_sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
 
 
@@ -949,21 +929,13 @@ def _py_normalize(vec: list[float]) -> list[float]:
     return [x / mag for x in vec]
 
 
-def _sq_dist(a, b) -> "F.Column":
+def _sq_dist(a: str, b: str) -> "F.Column":
     """Squared euclidean as a left fold — same op order as the engine's
     euclidean_distance (minus the sqrt), so DuckDB's list_sum matches.
-    str args (plain column references over already-double arrays) take
-    the memoized F.expr path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _cached_expr(
-            ("sqdist", a, b),
-            f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-            "0.0D, (acc, x) -> acc + coalesce(x, 0.0D))",
-        )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
+    Args name columns holding already-double arrays."""
+    return _cached_expr(
+        ("sqdist", a, b),
+        _sql_fold(_sql_ident(a), _sql_ident(b), "(x - y) * (x - y)"),
     )
 
 
@@ -1830,23 +1802,17 @@ def ivfpq_upsert(
 BQ_HALF = 32  # dims packed per 64-bit half (2 halves cover the 64 dims)
 
 
-def _bq_pack(v, start: int) -> "F.Column":
+def _bq_pack(v: str, start: int) -> "F.Column":
     """Sign bits of ``BQ_HALF`` consecutive dims packed into one BIGINT
     (MSB = first dim): a left fold acc·2 + [x > 0]. Two halves per
     64-dim vector keep every intermediate < 2³², far from BIGINT
     overflow (DuckDB errors on overflow rather than wrapping, so a
     single 64-bit pack would be engine-divergent at bit 63)."""
-    if isinstance(v, str):
-        return _cached_expr(
-            ("bqpack", v, start),
-            f"aggregate(slice({_sql_ident(v)}, {start}, {BQ_HALF}), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc * 2 + "
-            "(CASE WHEN x > 0 THEN 1 ELSE 0 END))",
-        )
-    return F.aggregate(
-        F.slice(v, start, BQ_HALF),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc * 2 + F.when(x > 0, 1).otherwise(0),
+    return _cached_expr(
+        ("bqpack", v, start),
+        f"aggregate(slice({_sql_ident(v)}, {start}, {BQ_HALF}), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc * 2 + "
+        "(CASE WHEN x > 0 THEN 1 ELSE 0 END))",
     )
 
 
@@ -1950,14 +1916,6 @@ def knn_bq_rerank(
 
 SQ_DIM = 64  # fixture embedding dim (constant across SFs, see TESTDATA.md)
 SQ_LEVELS = 255  # 8-bit codes: quantized values land in 0..255
-
-
-def _as_double(vec_col: str) -> "F.Column":
-    """array<float> → array<double> BEFORE any arithmetic — the SQ
-    family's cross-engine bit-parity hinges on every product being a
-    double×double (DuckDB's ::DOUBLE[] cast happens first; a float32
-    product differs in the last bits)."""
-    return F.col(vec_col).cast("array<double>")
 
 
 def sq_bounds(
@@ -2093,30 +2051,18 @@ def sq_codes(
     )
 
 
-def _sq_deq(codes, mins, maxs):
+def _sq_deq(codes: str, mins: str, maxs: str) -> "F.Column":
     """Dequantized reconstruction x̂ = mn + (code + 0.5)·(mx − mn)/255 —
     the bin midpoint, the standard SQ decode (half-bin centering halves
-    the worst-case reconstruction error vs the left edge). str args
-    (plain column names — arrays_zip names its struct fields after
-    them) take the memoized F.expr path."""
-    if (
-        isinstance(codes, str)
-        and isinstance(mins, str)
-        and isinstance(maxs, str)
-    ):
-        return _cached_expr(
-            ("sqdeq", codes, mins, maxs),
-            f"transform(arrays_zip({codes}, {mins}, {maxs}), "
-            f"r -> r.{mins} + (CAST(r.{codes} AS DOUBLE) + 0.5D) "
-            f"* (r.{maxs} - r.{mins}) / {float(SQ_LEVELS)!r}D)",
-        )
-    z = F.arrays_zip(codes, mins, maxs)
-    return F.transform(
-        z,
-        lambda r: r["mins"]
-        + (r["codes"].cast("double") + F.lit(0.5))
-        * (r["maxs"] - r["mins"])
-        / F.lit(float(SQ_LEVELS)),
+    the worst-case reconstruction error vs the left edge). Args are
+    unqualified column names: arrays_zip names its struct fields after
+    them."""
+    c, lo, hi = map(_sql_ident, (codes, mins, maxs))
+    return _cached_expr(
+        ("sqdeq", codes, mins, maxs),
+        f"transform(arrays_zip({c}, {lo}, {hi}), "
+        f"r -> r.{lo} + (CAST(r.{c} AS DOUBLE) + 0.5D) "
+        f"* (r.{hi} - r.{lo}) / {float(SQ_LEVELS)!r}D)",
     )
 
 
@@ -2520,29 +2466,19 @@ def bq2_codes(
     ).select(id_col, F.col("dim").cast("int").alias("dim"), "code")
 
 
-def _bq2_recon(codes, mx) -> "F.Column":
+def _bq2_recon(codes: str, mx: str) -> "F.Column":
     """Reconstruction x̂_d = sign · level: sign from the high bit
     (c ≥ 2 → +1), level = (BQ2_HI if the magnitude bit is set else
     BQ2_LO)·mx_d. Every op is IEEE double arithmetic in a fixed order,
-    mirrored exactly by the oracle SQL."""
-    if isinstance(codes, str) and isinstance(mx, str):
-        return _cached_expr(
-            ("bq2recon", codes, mx),
-            f"transform(arrays_zip({codes}, {mx}), "
-            f"r -> (CASE WHEN r.{codes} >= 2 THEN 1.0D ELSE -1.0D END) "
-            f"* ((CASE WHEN r.{codes} % 2 = 1 THEN {float(BQ2_HI)!r}D "
-            f"ELSE {float(BQ2_LO)!r}D END) * r.{mx}))",
-        )
-    z = F.arrays_zip(codes, mx)
-    return F.transform(
-        z,
-        lambda r: F.when(r["codes"] >= 2, F.lit(1.0)).otherwise(F.lit(-1.0))
-        * (
-            F.when(r["codes"] % 2 == 1, F.lit(BQ2_HI)).otherwise(
-                F.lit(BQ2_LO)
-            )
-            * r["mx"]
-        ),
+    mirrored exactly by the oracle SQL. Args are unqualified column
+    names (arrays_zip struct fields)."""
+    c, m = _sql_ident(codes), _sql_ident(mx)
+    return _cached_expr(
+        ("bq2recon", codes, mx),
+        f"transform(arrays_zip({c}, {m}), "
+        f"r -> (CASE WHEN r.{c} >= 2 THEN 1.0D ELSE -1.0D END) "
+        f"* ((CASE WHEN r.{c} % 2 = 1 THEN {float(BQ2_HI)!r}D "
+        f"ELSE {float(BQ2_LO)!r}D END) * r.{m}))",
     )
 
 
@@ -3185,20 +3121,17 @@ def lsh_hyperplane_buckets(
         ).alias("planes")
     )
 
-    def _bucket(acc, p):
-        # 2^plane_id via pow: shiftleft takes only a literal shift amount;
-        # double pow is exact far beyond H=12
-        return acc + F.when(
-            V.dot(F.col(vec_col), p["plane_vec"]) > 0,
-            F.pow(F.lit(2.0), p["plane_id"]).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
-    return (
-        base.crossJoin(F.broadcast(planes_row))
-        .select(
-            id_col,
-            F.aggregate(
-                "planes", F.lit(0).cast("long"), _bucket
-            ).alias("bucket"),
-        )
+    # 2^plane_id via pow: shiftleft takes only a literal shift amount;
+    # double pow is exact far beyond H=12. The lambda variables stay
+    # clear of the dot fold's x, y and acc.
+    dot_sql = _sql_dot_fold(_sql_ident(vec_col), "plane.plane_vec")
+    bucket = _cached_expr(
+        ("lshbucket", vec_col),
+        "aggregate(planes, CAST(0 AS BIGINT), (bucket, plane) -> bucket + "
+        f"CASE WHEN {dot_sql} > 0 "
+        "THEN CAST(pow(2.0D, plane.plane_id) AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END)",
+    )
+    return base.crossJoin(F.broadcast(planes_row)).select(
+        id_col, bucket.alias("bucket")
     )
